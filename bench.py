@@ -64,12 +64,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# bench hosts have RAM to spare; the library default stays conservative.
-# An EXPLICITLY exported SPARK_DRIVER_MEM is remembered first so the
-# scaling legs can honor it (smaller hosts legitimately need < the 8g
-# leg default; see _run_leg).
+# An EXPLICITLY exported SPARK_DRIVER_MEM is remembered so the scaling
+# legs can honor it (smaller hosts legitimately need < the 8g leg default;
+# see _run_leg).
 _USER_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM")
-os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
 
 # --leg mode: this process runs ONE scaling leg (fresh JVM, optionally
 # pinned to a cpuset) and prints a LEGRESULT line for the parent bench.
@@ -973,6 +971,9 @@ def run_scaling(out: dict) -> None:
 
 
 if __name__ == "__main__":
+    # bench hosts have RAM to spare; the library default stays conservative
+    # (set here, not at import: importing bench must leave the env alone)
+    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
     if _LEG_MODE:
         _leg_main(json.loads(sys.argv[2]))
     else:

@@ -138,38 +138,6 @@ add("CDX revisit classification: max-aggregate, no window sort",
     "sort of every historical capture. The classify join is sized "
     "|urls|, not |captures|.")
 
-import shutil
-import tempfile
-from new_ent_crawler_spark.sources.snapshot import BucketedDeltaTable
-_bdt_dir = tempfile.mkdtemp(prefix="bdt_plans_")
-_bdt = BucketedDeltaTable(_bdt_dir, name="plans_frontier", key_col="url",
-                          buckets=8)
-_bdt.overwrite(spark, spark.range(2000).selectExpr(
-    "concat('https://h/u', id) url", "cast(0 as int) status"), version=0)
-_bdt.append_delta(spark, spark.range(100).selectExpr(
-    "concat('https://h/u', id) url", "cast(1 as int) status"), version=1)
-_prev_abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-try:
-    add("Bucketed frontier merge: merge-on-read with ZERO exchanges",
-        _bdt.read(spark),
-        "Base and deltas are written with Spark native bucketing on the "
-        "url key, so every scan reports HashPartitioning(url, n) and the "
-        "whole last-writer-wins merge — latest-delta-per-key window, "
-        "delta-key distinct, base anti-join — runs bucket-local: no "
-        "Exchange node anywhere in the plan, at any frontier size "
-        "(broadcast disabled here to show the at-scale SortMergeJoin "
-        "shape; a 10^10-row frontier's deltas wouldn't broadcast).  This "
-        "is the Iceberg bucket-partitioned merge-on-read shape named in "
-        "VERDICT r03 as the last design gap.")
-finally:
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _prev_abt)
-    # inside finally: an add() failure must not leak the plans_frontier_*
-    # catalog entries / bdt_plans_* tempdir into the shared warehouse for
-    # later doc-gen runs
-    _bdt.drop(spark)
-    shutil.rmtree(_bdt_dir, ignore_errors=True)
-
 with open("/root/repo/PLANS.md", "w") as f:
     f.write("# PLANS — physical-plan review of the core operators\n\n"
             "`explain(formatted)` output (sf0.01 inputs) with the design "

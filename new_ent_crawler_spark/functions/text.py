@@ -19,14 +19,6 @@ def token_count(col) -> Column:
         F.size(F.split(c, r"\s+"))).cast("long")
 
 
-def word_token_count(col) -> Column:
-    """BPE-ish token estimate: count of word/number/punct chunks."""
-    c = F.col(col) if isinstance(col, str) else col
-    # strip everything that is part of a word chunk, count the residue diff
-    words = F.size(F.split(F.trim(c), r"[^A-Za-z0-9]+"))
-    return F.greatest(words, F.lit(0)).cast("long")
-
-
 def punct_ratio(col) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     n = F.length(c)
@@ -35,27 +27,11 @@ def punct_ratio(col) -> Column:
         .otherwise(F.lit(0.0))
 
 
-def upper_ratio(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n = F.length(c)
-    upper = n - F.length(F.regexp_replace(c, r"[A-Z]", ""))
-    return F.when(n > 0, upper.cast("double") / n.cast("double")) \
-        .otherwise(F.lit(0.0))
-
-
 def digit_ratio(col) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     n = F.length(c)
     digit = n - F.length(F.regexp_replace(c, r"[0-9]", ""))
     return F.when(n > 0, digit.cast("double") / n.cast("double")) \
-        .otherwise(F.lit(0.0))
-
-
-def mean_word_length(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n_alpha = F.length(F.regexp_replace(c, r"[^A-Za-z]", ""))
-    toks = token_count(c)
-    return F.when(toks > 0, n_alpha.cast("double") / toks.cast("double")) \
         .otherwise(F.lit(0.0))
 
 

@@ -90,13 +90,6 @@ def word_shingle_arrays(docs: DataFrame, id_col="doc_id", text_col="text",
                     .alias("shs")))
 
 
-def word_shingles(docs: DataFrame, id_col="doc_id", text_col="text",
-                  n: int = 3) -> DataFrame:
-    """Distinct word n-grams per document (exploded view)."""
-    return (word_shingle_arrays(docs, id_col, text_col, n)
-            .select("doc_id", F.explode("shs").alias("shingle")))
-
-
 def jaccard_pairs_from_shingle_arrays(arrs: DataFrame, threshold: float,
                                       max_shingle_freq: int,
                                       hash_shingles: bool = True) -> DataFrame:

@@ -488,6 +488,8 @@ def scan_mp3_headers(payload: bytes) -> dict:
         if rate is None:
             rate = r
         flen = (144_000 * kbps) // r + pad
+        if pos + flen > n:
+            break  # truncated final frame: not a whole frame, not counted
         hdrs.append(payload[pos:pos + 4].hex())
         frames += 1
         sum_kbps += kbps

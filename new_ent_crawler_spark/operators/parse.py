@@ -218,8 +218,3 @@ def dedup_candidates(cand: DataFrame) -> DataFrame:
         "b.page_type_score", "b.priority", "b.status", "b.crawler_count",
         "b.enqueue_wave")
 
-
-def discovered_links(parsed: DataFrame, wave_id: int) -> DataFrame:
-    """explode → dedup composition (the same URL may be discovered by
-    several parents in one wave; keep the best claim deterministically)."""
-    return dedup_candidates(explode_links(parsed, wave_id))

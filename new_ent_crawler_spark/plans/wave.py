@@ -66,10 +66,8 @@ class WaveEngine:
                  per_host_k: int = 4, max_waves: int = 64,
                  salt_buckets: int = 8, max_attempts: int = 3,
                  expected_total_urls: int = 1_000_000,
-                 bloom_fpp: float = 0.01, use_bloom: bool = True,
                  cache_pages: bool = True, compact_every: int = 8,
                  seen_broadcast_below: int = 4_000_000,
-                 seen_filter: str = "bloom",
                  verify_unique_urls: bool = False):
         self.spark = spark
         self.data_dir = data_dir
@@ -79,8 +77,6 @@ class WaveEngine:
         self.salt_buckets = salt_buckets
         self.max_attempts = max_attempts
         self.expected_total_urls = expected_total_urls
-        self.bloom_fpp = bloom_fpp
-        self.use_bloom = use_bloom
         # caching the (url, html) projection avoids a parquet scan per wave;
         # at 100 TB you would NOT cache — an Iceberg pages table bucketed by
         # url lets the per-wave broadcast probe prune to claimed buckets
@@ -98,10 +94,6 @@ class WaveEngine:
         # seen-side broadcast gate for the exact anti-join (see
         # DD.filter_new_urls); probes compare broadcast vs shuffle here
         self.seen_broadcast_below = seen_broadcast_below
-        # "bloom" (default) or "cuckoo" — the north_star names both; the
-        # cuckoo variant supports deletion (retiring frontier rows) at the
-        # cost of Python-per-item inserts (operators/dedup.py::CuckooFilter)
-        self.seen_filter = seen_filter
         # opt-in load-time check of the pages unique-url invariant (see
         # pages() docstring); off by default — at 10^10 rows it is a real
         # (if column-pruned) aggregate job, and deduped-at-ingest is the
@@ -159,29 +151,36 @@ class WaveEngine:
 
     # -- lifecycle -----------------------------------------------------------
 
-    def _init_state(self):
+    def _init_state(self, seeds: DataFrame | None = None):
+        """Commit wave 0: the frontier seeded from ``seeds`` (default: the
+        data dir's seed list) and the per-host budgets from robots."""
         # seeding is a constants-projection over the seed list plus a
-        # robots->budgets projection; when the footers say both inputs are
+        # robots->budgets projection; when the footers say an input is
         # small, run it driver-side with pyarrow (two Spark jobs per crawl
         # start otherwise — per-run fixed cost on the scaling legs).  The
         # two paths are pinned equal by tests/test_wave_engine.py.
         import pyarrow.parquet as pq
 
         from ..parquet_meta import footer_rows
+
+        def _small(path):
+            n = footer_rows(path)
+            return n is not None and n <= 2_000_000
+
         seeds_p = os.path.join(self.data_dir, "seeds.parquet")
         robots_p = os.path.join(self.data_dir, "robots.parquet")
-        n_seeds = footer_rows(seeds_p)
-        n_robots = footer_rows(robots_p)
-        if (n_seeds is not None and n_seeds <= 2_000_000
-                and n_robots is not None and n_robots <= 2_000_000):
+        if seeds is None and _small(seeds_p):
             frontier_pa = FR.init_frontier_pa(pq.read_table(seeds_p))
             self.frontier_t.overwrite_rows(frontier_pa, frontier_pa.schema,
                                            meta={"wave": 0})
+        else:
+            frontier = FR.init_frontier(
+                self.seeds() if seeds is None else seeds)
+            self.frontier_t.overwrite(frontier, meta={"wave": 0})
+        if _small(robots_p):
             self._budgets_pdf = PL.init_budgets_pd(
                 pq.read_table(robots_p).to_pandas(), self.per_host_k)
         else:
-            frontier = FR.init_frontier(self.seeds())
-            self.frontier_t.overwrite(frontier, meta={"wave": 0})
             self._budgets_pdf = (
                 PL.init_budgets(self.robots(), self.per_host_k).toPandas())
         self.budgets_t.overwrite_rows(self._budgets_pdf, BUDGETS_PA,
@@ -211,17 +210,42 @@ class WaveEngine:
         return self.frontier_t.meta().get("wave", 0)
 
     def _ensure_bloom(self, frontier: DataFrame):
-        if not self.use_bloom:
-            return
         if self._bloom is None:
-            if self.seen_filter == "cuckoo":
-                self._bloom = DD.build_cuckoo(
-                    frontier.select("url"),
-                    expected=self.expected_total_urls)
-            else:
-                self._bloom = DD.build_bloom(
-                    frontier.select("url"),
-                    expected=self.expected_total_urls, fpp=self.bloom_fpp)
+            self._bloom = DD.build_bloom(frontier.select("url"),
+                                         expected=self.expected_total_urls)
+
+    def _bloom_add(self, urls: DataFrame, n: int):
+        """Add ``n`` URLs to the Bloom: up to 10^6 through one md5 collect,
+        beyond that a distributed treeAggregate build merged in (a full
+        sized Bloom per partition plus a merge, which only wins when the
+        collect itself would strain the driver)."""
+        if n <= 1_000_000:
+            self._bloom.add_many_hex(
+                [r[0] for r in urls.select(F.md5("url")).collect()])
+        else:
+            self._bloom = self._bloom.merge(DD.build_bloom(
+                urls.select("url"), expected=self.expected_total_urls))
+
+    def add_seeds(self, seeds: DataFrame) -> None:
+        """Add a seed batch (the ``seeds.parquet`` schema) to the frontier.
+
+        An engine with no state takes the batch as its wave-0 frontier.
+        Otherwise the batch's URLs that the frontier does not hold yet are
+        committed as one delta at the current wave, so the next wave can
+        claim them, and go into the Bloom if it is built: a seed missing
+        from the Bloom would let a later link to it pass as new."""
+        if not self.frontier_t.exists():
+            self._init_state(seeds)
+            return
+        wave = self.last_wave()
+        new = FR.init_frontier(seeds).join(self.frontier().select("url"),
+                                           "url", "left_anti")
+        snap = self.frontier_t.append_delta(new, version=wave,
+                                            meta={"wave": wave})
+        n_new = self.frontier_t.dir_rows(snap["dirs"][-1])
+        if self._bloom is not None and n_new > 0:
+            self._bloom_add(self.spark.read.parquet(
+                os.path.join(self.frontier_t.path, snap["dirs"][-1])), n_new)
 
     # -- one micro-batch -----------------------------------------------------
 
@@ -579,25 +603,11 @@ class WaveEngine:
             # incremental seen-set update: a wave's new URLs are bounded by
             # the politeness budgets.  Small waves already brought their md5
             # digests back on the fused control job (no extra Spark job at
-            # all — one vectorized numpy pass adds them); mid-sized waves
-            # collect digests in a dedicated job; huge waves fall back to
-            # the distributed treeAggregate build + merge, which costs a
-            # full sized-bloom per partition + merge shuffle and only wins
-            # when the collect itself would strain the driver
+            # all — one vectorized numpy pass adds them)
             if new_md5_blobs is not None:
                 self._bloom.add_many_hex(new_md5_blobs)
-            elif n_new <= 1_000_000:
-                self._bloom.add_many_hex(
-                    [r[0] for r in
-                     new_urls.select(F.md5("url")).collect()])
-            elif self.seen_filter == "cuckoo":
-                self._bloom = self._bloom.merge(DD.build_cuckoo(
-                    new_urls.select("url"),
-                    expected=self.expected_total_urls))
             else:
-                self._bloom = self._bloom.merge(DD.build_bloom(
-                    new_urls.select("url"),
-                    expected=self.expected_total_urls, fpp=self.bloom_fpp))
+                self._bloom_add(new_urls, n_new)
 
         t0 = _t("bloom_merge", t0)
         stats.update({"candidates": n_candidates, "new": n_new,
@@ -626,14 +636,22 @@ class WaveEngine:
             p.count()
 
     def run(self, resume: bool = True) -> list[dict]:
+        """Crawl from the data dir's seed list (or resume the work dir's
+        state) until the frontier drains or ``max_waves``."""
         if not (resume and self.frontier_t.exists()):
             self._init_state()
+        return self.drain()
+
+    def drain(self) -> list[dict]:
+        """Run waves from the last committed one until the frontier has no
+        eligible row or ``max_waves`` is reached; returns the per-wave
+        stats.  The one crawl loop: ``run()`` and the stream front end
+        (streaming/stream.py) both call it."""
         start = self.last_wave()
         self._rollback_appends(start)
         self._budgets_pdf = None  # reload politeness state post-rollback
         pages = self.pages().select("url", "html")
         if self.verify_unique_urls:
-            from pyspark.sql import functions as F
             dup = (self.pages().select("url").groupBy("url")
                    .agg(F.count("*").alias("n")).filter("n > 1").limit(1)
                    .collect())

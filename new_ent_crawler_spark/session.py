@@ -68,8 +68,3 @@ def get_spark(app: str = "new-ent-crawler-spark", cpus: int | None = None,
         builder = builder.config(k, str(v))
     return builder.getOrCreate()
 
-
-def stop_spark():
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -134,7 +134,7 @@ class Simulator:
                                           e.priority, wave)
                     discovered.append(ne)
             # in-wave duplicate discovery: deterministic winner, matching the
-            # engine's row_number rule (operators/parse.py discovered_links)
+            # engine's max-struct rule (operators/parse.py dedup_candidates)
             discovered.sort(key=lambda n: (n.url, -n.priority, n.depth,
                                            -n.score, n.seed_id))
             for ne in discovered:

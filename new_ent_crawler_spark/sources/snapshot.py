@@ -164,10 +164,8 @@ class SnapshotTable:
 
 def _lww_merge(base: DataFrame, deltas: DataFrame, key_col: str,
                version_col: str) -> DataFrame:
-    """Last-writer-wins merge-on-read resolution shared by ``DeltaTable``
-    (shuffled/broadcast at sandbox scale) and ``BucketedDeltaTable``
-    (bucket-local, zero exchanges): base rows whose key has no delta row,
-    unioned with the latest delta row per key."""
+    """Last-writer-wins merge-on-read resolution: base rows whose key has
+    no delta row, unioned with the latest delta row per key."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
     w = Window.partitionBy(key_col).orderBy(F.col(version_col).desc())
@@ -306,202 +304,3 @@ class DeltaTable(SnapshotTable):
         return self.overwrite(resolved, meta={**self.meta(),
                                               "wave": version})
 
-
-class BucketedDeltaTable:
-    """Bucket-local merge-on-read: the 10^10-row variant of ``DeltaTable``.
-
-    ``DeltaTable.read`` resolves base-vs-delta last-writer-wins with a
-    key-hash shuffle of both sides (AQE broadcasts the small delta side at
-    sandbox scale, but a 10^10-row frontier whose per-wave deltas are
-    millions of rows gets a frontier-wide SortMergeJoin exchange).  Real
-    Iceberg avoids that by bucketing both base and equality-delete files by
-    the key.  This class expresses the same property in stock Spark: base
-    and deltas are written with ``bucketBy(n, key)`` (Spark native
-    bucketing), so every scan reports ``HashPartitioning(key, n)`` and the
-    whole merge — latest-delta-per-key window, delta-key distinct, base
-    anti-join — runs with ZERO shuffle exchanges at ANY table size
-    (asserted in tests/test_snapshot.py::test_bucketed_merge_no_exchange).
-
-    Catalog notes: bucketed writes require ``saveAsTable``; the files are
-    external (under ``path``) and ``register`` re-creates the catalog
-    entries in a fresh session from the stored spec (``CREATE TABLE …
-    CLUSTERED BY … LOCATION``), so the table survives session restarts the
-    way an Iceberg catalog table would.  Snapshot atomicity/time-travel is
-    ``SnapshotTable``'s manifest job and is not duplicated here — on a
-    real cluster both concerns live in the Iceberg catalog; in-sandbox the
-    wave engine keeps the manifest-based ``DeltaTable`` (whose deltas stay
-    broadcast-small under politeness budgets) and this class carries the
-    at-scale merge shape.
-    """
-
-    VERSION_COL = "_commit_version"
-
-    def __init__(self, path: str, name: str, key_col: str = "url",
-                 buckets: int = 64):
-        self.path = path
-        self.name = name              # catalog-name prefix, e.g. "frontier"
-        self.key_col = key_col
-        self.buckets = buckets
-        self.base_table = f"{name}_base"
-        self.delta_table = f"{name}_deltas"
-        os.makedirs(path, exist_ok=True)
-
-    @property
-    def _spec_path(self) -> str:
-        return os.path.join(self.path, "bucket_spec.json")
-
-    def _tag(self, df: DataFrame, version: int):
-        from pyspark.sql import functions as F
-        return df.withColumn(self.VERSION_COL,
-                             F.lit(int(version)).cast("long"))
-
-    def _save(self, df: DataFrame, table: str, subdir: str, mode: str):
-        (df.write.mode(mode).format("parquet")
-           .bucketBy(self.buckets, self.key_col)
-           .sortBy(self.key_col)
-           .option("path", os.path.join(self.path, subdir))
-           .saveAsTable(table))
-
-    def overwrite(self, spark: SparkSession, df: DataFrame,
-                  version: int = 0) -> None:
-        """Copy-on-write (re)write of the base + clear of the deltas — the
-        compaction shape.  The new base is fully materialized into a fresh
-        subdir BEFORE the old tables and files are dropped, so a
-        compaction may read the table it is rewriting
-        (``t.overwrite(spark, t.read(spark))``) without its lazy input
-        plan scanning already-deleted files."""
-        self._guard_crosswire(spark)
-        tagged = self._tag(df, version)
-        tmp_sub = "base_new_" + uuid.uuid4().hex[:8]
-        tmp_table = f"{self.base_table}_tmp"
-        spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-        self._save(tagged, tmp_table, tmp_sub, "overwrite")  # runs the plan
-        # the input is now safely on disk; swap it in.  The old base is
-        # renamed ASIDE (not rmtree'd) before the new dir is promoted, so
-        # a crash anywhere in the swap leaves at least one complete copy
-        # of the data on disk (base_old_* + base_new_* are both
-        # recoverable); only after the promote + spec rewrite succeed are
-        # the old files deleted.
-        spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-        spark.sql(f"DROP TABLE IF EXISTS {self.base_table}")
-        spark.sql(f"DROP TABLE IF EXISTS {self.delta_table}")
-        base_dir = os.path.join(self.path, "base")
-        old_sub = "base_old_" + uuid.uuid4().hex[:8]
-        if os.path.isdir(base_dir):
-            os.rename(base_dir, os.path.join(self.path, old_sub))
-        os.rename(os.path.join(self.path, tmp_sub), base_dir)
-        with open(self._spec_path, "w") as f:
-            json.dump({"key_col": self.key_col, "buckets": self.buckets,
-                       "schema_ddl": tagged.schema.toDDL()}, f)
-        shutil.rmtree(os.path.join(self.path, old_sub), ignore_errors=True)
-        shutil.rmtree(os.path.join(self.path, "deltas"), ignore_errors=True)
-        self.register(spark)
-
-    def _guard_crosswire(self, spark: SparkSession) -> None:
-        """Catalog entries are keyed by ``name``, which is session-global:
-        a second instance with the same name but a DIFFERENT path would
-        silently read/append/drop the first instance's files through the
-        shared catalog entries.  Raise instead — the caller picked a
-        colliding name, and every operation after this point would
-        corrupt the other table."""
-        me = os.path.realpath(self.path)
-        for table, sub in ((self.base_table, "base"),
-                           (self.delta_table, "deltas")):
-            if not spark.catalog.tableExists(table):
-                continue
-            rows = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-            loc = next((r["data_type"] for r in rows
-                        if r["col_name"] == "Location"), None)
-            if loc is None:
-                continue
-            loc_path = os.path.realpath(loc.removeprefix("file:"))
-            if loc_path != os.path.join(me, sub):
-                raise ValueError(
-                    f"catalog table {table!r} already points at "
-                    f"{loc_path!r}, not {os.path.join(me, sub)!r}: two "
-                    f"BucketedDeltaTable instances share the name "
-                    f"{self.name!r} with different paths")
-
-    def _ensure_registered(self, spark: SparkSession) -> None:
-        """Fresh-session guard: if the spec exists but a catalog entry for
-        on-disk files is missing, re-register before touching the table."""
-        self._guard_crosswire(spark)
-        if not os.path.exists(self._spec_path):
-            return
-        base_missing = (os.path.isdir(os.path.join(self.path, "base"))
-                        and not spark.catalog.tableExists(self.base_table))
-        delta_missing = (os.path.isdir(os.path.join(self.path, "deltas"))
-                         and not spark.catalog.tableExists(self.delta_table))
-        if base_missing or delta_missing:
-            self.register(spark)
-
-    def append_delta(self, spark: SparkSession, df: DataFrame,
-                     version: int) -> None:
-        """O(delta) keyed append; resolution is deferred to ``read`` (the
-        merge-on-read contract).  Append keeps the bucket spec, so delta
-        files stay join-aligned with the base."""
-        # fresh session, files on disk: re-register instead of letting the
-        # "overwrite" create below clobber the existing deltas
-        self._ensure_registered(spark)
-        tagged = self._tag(df, version)
-        if not os.path.exists(self._spec_path):
-            # delta-before-base bootstrap: without a spec the files could
-            # never be re-registered after a session restart (stranded on
-            # disk) — persist the spec from the first delta's schema
-            with open(self._spec_path, "w") as f:
-                json.dump({"key_col": self.key_col, "buckets": self.buckets,
-                           "schema_ddl": tagged.schema.toDDL()}, f)
-        mode = ("append" if spark.catalog.tableExists(self.delta_table)
-                else "overwrite")
-        self._save(tagged, self.delta_table, "deltas", mode)
-
-    def register(self, spark: SparkSession) -> None:
-        """Re-create the catalog entries in a fresh session from the stored
-        spec — same files, same bucket layout (the catalog-persistence role
-        Iceberg plays on a real cluster)."""
-        self._guard_crosswire(spark)
-        with open(self._spec_path) as f:
-            spec = json.load(f)
-        for table, sub in ((self.base_table, "base"),
-                           (self.delta_table, "deltas")):
-            loc = os.path.join(self.path, sub)
-            if not os.path.isdir(loc) or spark.catalog.tableExists(table):
-                continue
-            spark.sql(
-                f"CREATE TABLE {table} ({spec['schema_ddl']}) "
-                f"USING parquet "
-                f"CLUSTERED BY ({spec['key_col']}) "
-                f"SORTED BY ({spec['key_col']}) "
-                f"INTO {spec['buckets']} BUCKETS "
-                f"LOCATION '{loc}'")
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        """LWW-merged view.  Every stage inherits the scans'
-        ``HashPartitioning(key, buckets)``: the latest-per-key window, the
-        delta-key distinct, and the base anti-join all run bucket-local —
-        no exchange at any frontier size."""
-        self._ensure_registered(spark)
-        has_base = spark.catalog.tableExists(self.base_table)
-        has_delta = spark.catalog.tableExists(self.delta_table)
-        if has_base and not has_delta:
-            return spark.table(self.base_table).drop(self.VERSION_COL)
-        if has_delta and not has_base:
-            # delta-before-base bootstrap: resolve latest-per-key over the
-            # deltas alone (an empty base needs no anti-join)
-            from pyspark.sql import Window
-            from pyspark.sql import functions as F
-            deltas = spark.table(self.delta_table)
-            w = Window.partitionBy(self.key_col).orderBy(
-                F.col(self.VERSION_COL).desc())
-            return (deltas.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn", self.VERSION_COL))
-        base = spark.table(self.base_table).drop(self.VERSION_COL)
-        return _lww_merge(base, spark.table(self.delta_table),
-                          self.key_col, self.VERSION_COL)
-
-    def drop(self, spark: SparkSession) -> None:
-        self._guard_crosswire(spark)  # never drop another table's entries
-        spark.sql(f"DROP TABLE IF EXISTS {self.base_table}")
-        spark.sql(f"DROP TABLE IF EXISTS {self.delta_table}")
-        shutil.rmtree(self.path, ignore_errors=True)

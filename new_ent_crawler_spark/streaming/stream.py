@@ -1,14 +1,12 @@
-"""Structured Streaming front-end for the crawl pipeline.
+"""Structured Streaming front end for the crawl engine.
 
-The north_star frames each wave as a "Structured-Streaming-style micro-
-batch"; the batch WaveEngine is the primary implementation (snapshot
-checkpoints make it resumable and benchmarkable), and this module provides
-the genuine ``readStream`` variant for continuous operation: seed files (or
-frontier appends) land in a directory, a file-source stream picks them up,
-and ``foreachBatch`` funnels every micro-batch through the same wave logic —
-fetch join, Arrow parse, dedup, lineage — so the two entry points share one
-code path (the reference's dispatcher poll loop, dispatcher/dispatcher.py:35,
-becomes the stream trigger interval).
+Seed files land in a directory; a file-source stream picks them up, and
+``foreachBatch`` hands each micro-batch to one ``WaveEngine``: the batch's
+seeds join the frontier, then the engine runs waves until the frontier
+drains.  The stream therefore crawls through the same ``run_wave`` as the
+batch ``run()`` — robots filter, politeness budgets, retry cap and Bloom
+seen filter included — and the reference's dispatcher poll loop
+(dispatcher/dispatcher.py:35) becomes the stream trigger interval.
 
 Also includes a watermarked windowed aggregation over crawl lineage — the
 streaming metrics the reference kept as ``crawler_log`` rows
@@ -17,13 +15,10 @@ streaming metrics the reference kept as ``crawler_log`` rows
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import frontier as FR
-from ..operators import parse as PS
+from ..plans.wave import WaveEngine
 
 
 def stream_seeds(spark: SparkSession, seed_dir: str,
@@ -36,115 +31,22 @@ def stream_seeds(spark: SparkSession, seed_dir: str,
             .parquet(seed_dir))
 
 
-def crawl_stream(spark: SparkSession, seed_dir: str, pages_path: str,
-                 out_dir: str, checkpoint_dir: str,
+def crawl_stream(engine: WaveEngine, seed_dir: str, checkpoint_dir: str,
                  trigger_seconds: int = 10):
-    """Continuous crawl of newly-arriving seed listings.
+    """Continuous crawl of seed files dropped into ``seed_dir``.
 
-    Each micro-batch: seeds -> frontier rows -> fetch join against pages ->
-    Arrow parse -> extracted rows appended to ``out_dir``.  Link discovery
-    feeds the ``discovered/`` side output, which ``drain_discovered_stream``
-    (a second file-source stream) crawls to arbitrary depth.
+    Each micro-batch adds its seeds to ``engine``'s frontier and drains it;
+    the results land in the engine's tables (``engine.extracted()``,
+    ``engine.frontier()``, ``engine.lineage_t``).  A micro-batch replayed
+    after a crash re-adds only seeds the frontier lacks, and the drain
+    resumes from the last committed wave.  Returns the unstarted
+    ``DataStreamWriter``.
     """
-    pages = spark.read.parquet(pages_path).select("url", "html")
-    seeds = stream_seeds(spark, seed_dir)
-
     def process_batch(batch_df: DataFrame, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        # pin the micro-batch DISTRIBUTED: localCheckpoint materializes the
-        # batch in executor storage and truncates lineage, so re-use across
-        # the several actions below neither recomputes the source nor
-        # funnels the batch through the driver (a collect() pin would cap
-        # batch size at driver memory)
-        claimed = batch_df.localCheckpoint(eager=True)
-        claimed = FR.init_frontier(claimed)
-        hits = pages.join(F.broadcast(claimed), "url", "inner")
-        missing = (claimed
-                   .join(F.broadcast(hits.select("url")), "url", "left_anti")
-                   .withColumn("html", F.lit(None).cast("binary")))
-        fetched = hits.unionByName(missing.select(*hits.columns))
-        parsed = PS.parse_pages(fetched).persist()
-        (parsed.withColumn("wave_id", F.lit(batch_id).cast("long"))
-         .drop("links")
-         .write.mode("append").parquet(os.path.join(out_dir, "extracted")))
-        links = PS.discovered_links(parsed, wave_id=batch_id)
-        links.write.mode("append").parquet(os.path.join(out_dir, "discovered"))
-        parsed.unpersist()
+        engine.add_seeds(batch_df)
+        engine.drain()
 
-    return (seeds.writeStream
-            .foreachBatch(process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(processingTime=f"{trigger_seconds} seconds"))
-
-
-def drain_discovered_stream(spark: SparkSession, pages_path: str,
-                            out_dir: str, checkpoint_dir: str,
-                            trigger_seconds: int = 5):
-    """Second file-source stream over ``discovered/``: re-enters the same
-    fetch+parse wave logic, so the streaming front-end crawls depth > 1
-    without the batch engine.
-
-    The cycle trick: a single stream cannot read its own query as a source,
-    but a *file-source* stream happily picks up files its own
-    ``foreachBatch`` appended to the watched directory — so deeper link
-    discoveries written back into ``discovered/`` are consumed on later
-    triggers, walking the crawl tree one micro-batch per depth level.  The
-    loop terminates because each batch anti-joins the accumulated
-    ``seen/`` URL set (exact, parquet-backed; the batch engine's Bloom
-    would front it at scale) before fetching — once a depth level yields
-    no unseen URLs, no new files appear and the stream idles.
-    """
-    pages = spark.read.parquet(pages_path).select("url", "html")
-    disc_schema = ("url string, host string, company string, seed_id long, "
-                   "keyword string, depth int, page_type_score int, "
-                   "priority int, status int, crawler_count int, "
-                   "enqueue_wave long")
-    disc_dir = os.path.join(out_dir, "discovered")
-    seen_dir = os.path.join(out_dir, "seen")
-    # the producer stream may not have emitted its first batch yet; an
-    # empty watched dir is fine, a missing one fails stream analysis
-    os.makedirs(disc_dir, exist_ok=True)
-    disc = (spark.readStream.schema(disc_schema)
-            .option("maxFilesPerTrigger", 8)
-            .parquet(disc_dir))
-
-    def process_batch(batch_df: DataFrame, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        sess = batch_df.sparkSession
-        cand = batch_df.dropDuplicates(["url"])
-        if os.path.isdir(seen_dir) and any(
-                f.endswith(".parquet") for f in os.listdir(seen_dir)):
-            cand = cand.join(sess.read.parquet(seen_dir), "url", "left_anti")
-        # distributed pin (see crawl_stream): the drain's candidate sets are
-        # unbounded at depth > 1 on a real corpus — never collect() them
-        claimed = cand.localCheckpoint(eager=True)
-        if claimed.isEmpty():
-            return
-        hits = pages.join(F.broadcast(claimed), "url", "inner")
-        missing = (claimed
-                   .join(F.broadcast(hits.select("url")), "url", "left_anti")
-                   .withColumn("html", F.lit(None).cast("binary")))
-        fetched = hits.unionByName(missing.select(*hits.columns))
-        parsed = PS.parse_pages(fetched).persist()
-        (parsed.withColumn("wave_id", F.lit(batch_id).cast("long"))
-         .drop("links")
-         .write.mode("append").parquet(os.path.join(out_dir, "extracted")))
-        links = PS.discovered_links(parsed, wave_id=batch_id)
-        links.write.mode("append").parquet(disc_dir)
-        # seen/ commits LAST: foreachBatch replays a batch after a crash,
-        # and the replay anti-joins against seen/ — were seen/ written
-        # first, a crash between it and the output appends would drop those
-        # URLs forever (never extracted, never re-claimed).  Writing it
-        # after the outputs makes the batch at-least-once: a replay can
-        # duplicate extracted/discovered rows (same wave_id=batch_id, so an
-        # exact-duplicate dropDuplicates downstream restores exactly-once)
-        # but can never lose a URL.
-        claimed.select("url").write.mode("append").parquet(seen_dir)
-        parsed.unpersist()
-
-    return (disc.writeStream
+    return (stream_seeds(engine.spark, seed_dir).writeStream
             .foreachBatch(process_batch)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(processingTime=f"{trigger_seconds} seconds"))
@@ -154,11 +56,15 @@ def lineage_window_stream(spark: SparkSession, lineage_dir: str,
                           window: str = "1 minute",
                           watermark: str = "2 minutes") -> DataFrame:
     """Watermarked tumbling-window crawl metrics over streaming lineage rows
-    (urls/sec per window — the live counterpart of BENCH numbers)."""
+    (urls/sec per window — the live counterpart of BENCH numbers).
+    ``lineage_dir`` is a ``WaveEngine``'s lineage table
+    (``engine.lineage_t.path``) or any directory of lineage parquet files;
+    the glob filter skips the table's manifest."""
     schema = ("wave_id long, stage string, partition_id int, urls_in long, "
               "urls_out long, dedup_hits long, ts timestamp")
     rows = (spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 4)
+            .option("pathGlobFilter", "*.parquet")
             .parquet(lineage_dir))
     return (rows
             .withWatermark("ts", watermark)

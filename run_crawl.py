@@ -34,9 +34,6 @@ def main(argv=None):
     ap.add_argument("--max-waves", type=int, default=64)
     ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--expected-urls", type=int, default=1_000_000)
-    ap.add_argument("--seen-filter", choices=["bloom", "cuckoo"],
-                    default="bloom",
-                    help="URL-seen pruning filter (cuckoo adds deletion)")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--assemble", action="store_true",
                     help="write sink tables after the crawl")
@@ -53,8 +50,7 @@ def main(argv=None):
     eng = WaveEngine(spark, args.data, args.work,
                      per_host_k=args.per_host_k, max_waves=args.max_waves,
                      salt_buckets=args.salt_buckets,
-                     expected_total_urls=args.expected_urls,
-                     seen_filter=args.seen_filter)
+                     expected_total_urls=args.expected_urls)
     t0 = time.perf_counter()
     stats = eng.run(resume=not args.no_resume)
     elapsed = time.perf_counter() - t0

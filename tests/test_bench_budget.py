@@ -36,6 +36,26 @@ def bench():
     return b
 
 
+def test_import_leaves_environment_unchanged():
+    """Importing bench changes no environment variable: a process that
+    imports it (this test suite does) must not start its JVM with the
+    bench's driver heap."""
+    script = textwrap.dedent("""
+        import os, sys
+        sys.path.insert(0, %r)
+        before = dict(os.environ)
+        import bench
+        bench._EMITTED = True
+        assert dict(os.environ) == before, (
+            set(os.environ.items()) ^ set(before.items()))
+    """) % REPO
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_DRIVER_MEM"}
+    r = subprocess.run([sys.executable, "-c", script], env=env,
+                       stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+                       text=True, timeout=120)
+    assert r.returncode == 0, r.stderr[-2000:]
+
+
 def _leg(sec: float, cpus: int) -> dict:
     return {"cpus": cpus, "seconds": sec, "urls_per_sec": 1000.0 / sec,
             "user_pct": 80.0, "sys_pct": 5.0, "steal_pct": 0.0,

@@ -727,6 +727,19 @@ def test_mp3_header_scan_skips_id3_and_junk():
         "n_frames"] == 1
 
 
+def test_mp3_header_scan_skips_truncated_final_frame():
+    """A stream cut mid-frame reports one frame fewer: the partial last
+    frame is neither counted nor digested."""
+    stream = MM.encode_mp3_stream([(9, 0, b"a"), (14, 1, b"b")])
+    whole = MM.scan_mp3_headers(stream)
+    cut = MM.scan_mp3_headers(stream[:-100])
+    assert cut["n_frames"] == whole["n_frames"] - 1 == 1
+    assert cut["sum_kbps"] == 128
+    assert cut["duration_ms"] == 1152 * 1000 // 44100
+    assert cut["hdr_md5"] == hashlib.md5(
+        stream[0:4].hex().encode()).hexdigest()
+
+
 def test_mp3_header_scan_honest_stubs():
     frame = bytearray(MM.encode_mp3_stream([(9, 0, b"a")]))
     layer2 = bytearray(frame)

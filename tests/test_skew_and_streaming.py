@@ -2,15 +2,17 @@
 Streaming front-end."""
 
 import os
-import time
+import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 from pyspark.sql import functions as F
 
 from new_ent_crawler_spark.plans.wave import WaveEngine
 from new_ent_crawler_spark.simulator import Simulator
 from new_ent_crawler_spark.synth import webgen
+
+ALTER_INFO = "/corp-query-entprise-info-alterInfo"
 
 
 def test_skewed_crawl_matches_simulator(spark, skew_web, tmp_path_factory):
@@ -37,45 +39,64 @@ def test_skewed_crawl_matches_simulator(spark, skew_web, tmp_path_factory):
     assert share > 0.7
 
 
-def test_streaming_crawl_smoke(spark, tiny_web, tmp_path):
-    """readStream seeds -> foreachBatch fetch+parse -> extracted parquet."""
+def test_stream_crawl_matches_batch_crawl(spark, tiny_web, tmp_path):
+    """One seed file dropped into the watched dir: the stream crawl runs the
+    batch engine's waves, so it ends with the same seen set and crawl order
+    as ``WaveEngine.run()`` and obeys robots.txt.  The web's own rules
+    (/private/, /admin/) match no URL, so the copy here also disallows the
+    alterInfo pages on every host."""
     from new_ent_crawler_spark.streaming import stream as ST
-    web_dir, _ = tiny_web
-    seed_dir = str(tmp_path / "seeds_in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(seed_dir)
-    # drop the seed file into the watched dir
-    t = pq.read_table(web_dir + "/seeds.parquet")
-    pq.write_table(t, os.path.join(seed_dir, "batch0.parquet"))
+    src, _ = tiny_web
+    web_dir = str(tmp_path / "web")
+    shutil.copytree(src, web_dir)
+    robots_p = os.path.join(web_dir, "robots.parquet")
+    robots = pq.read_table(robots_p)
+    rules = [r + [ALTER_INFO] for r in robots.column("disallow").to_pylist()]
+    pq.write_table(robots.set_column(
+        robots.schema.get_field_index("disallow"), "disallow",
+        pa.array(rules, pa.list_(pa.string()))), robots_p)
 
-    q = ST.crawl_stream(spark, seed_dir, web_dir + "/pages.parquet",
-                        out_dir, ckpt, trigger_seconds=1).start()
+    batch = WaveEngine(spark, web_dir, str(tmp_path / "batch"),
+                       per_host_k=8, max_waves=30, expected_total_urls=10_000)
+    batch.run()
+
+    seed_dir = str(tmp_path / "seeds_in")
+    os.makedirs(seed_dir)
+    shutil.copy(os.path.join(web_dir, "seeds.parquet"),
+                os.path.join(seed_dir, "batch0.parquet"))
+    eng = WaveEngine(spark, web_dir, str(tmp_path / "stream"),
+                     per_host_k=8, max_waves=30, expected_total_urls=10_000)
+    q = ST.crawl_stream(eng, seed_dir, str(tmp_path / "ckpt"),
+                        trigger_seconds=1).start()
     try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if os.path.exists(os.path.join(out_dir, "extracted")):
-                try:
-                    n = spark.read.parquet(
-                        os.path.join(out_dir, "extracted")).count()
-                    if n >= t.num_rows:
-                        break
-                except Exception:
-                    pass
-            time.sleep(2)
+        q.processAllAvailable()
     finally:
         q.stop()
 
-    ext = spark.read.parquet(os.path.join(out_dir, "extracted"))
-    assert ext.count() == t.num_rows  # every seed listing fetched+parsed
-    links = spark.read.parquet(os.path.join(out_dir, "discovered"))
-    assert links.count() > 0
-    # extracted text byte-identity holds on the streaming path too
-    pages = spark.read.parquet(web_dir + "/pages.parquet")
-    joined = (ext.filter(F.col("text").isNotNull()).alias("e")
-              .join(pages.alias("p"), "url")
-              .filter(~F.col("e.text").eqNullSafe(F.col("p.text"))))
-    assert joined.count() == 0
+    assert eng.seen_urls() == batch.seen_urls()
+    assert eng.crawl_order() == batch.crawl_order()
+
+    def texts(e):
+        return {r.url: r.text
+                for r in e.extracted().select("url", "text").collect()}
+    assert texts(eng) == texts(batch)
+    # the lineage metrics stream reads the engine's lineage table
+    lin = (ST.lineage_window_stream(spark, eng.lineage_t.path)
+           .writeStream.format("memory").queryName("stream_crawl_lineage")
+           .outputMode("append").trigger(availableNow=True).start())
+    assert lin.awaitTermination(120)
+    assert eng.extracted().filter(
+        F.col("url").contains(ALTER_INFO)).count() == 0
+    # the rule is what kept them out: the same web without it links to
+    # alterInfo pages the crawl would reach
+    seeds = pq.read_table(os.path.join(src, "seeds.parquet")).to_pylist()
+    src_robots = {r["host"]: (r["disallow"], r["crawl_delay"]) for r in
+                  pq.read_table(os.path.join(src, "robots.parquet"))
+                  .to_pylist()}
+    sim = Simulator(webgen.load_fetch(src), seeds, src_robots,
+                    per_host_k=8, max_waves=30)
+    sim.run()
+    assert any(ALTER_INFO in u for u in sim.seen_urls())
 
 
 def test_lineage_window_stream(spark, tmp_path):
@@ -101,109 +122,13 @@ def test_lineage_window_stream(spark, tmp_path):
         "window", "stage", "urls_in", "urls_out", "dedup_hits"]
 
 
-def test_streaming_drain_crawls_deeper_levels(spark, tiny_web, tmp_path):
-    """crawl_stream produces discovered/; drain_discovered_stream re-enters
-    the wave logic and walks the crawl tree (depth>=2) without the batch
-    engine — including picking up files appended by its own foreachBatch."""
-    from new_ent_crawler_spark.streaming import stream as ST
-    web_dir, _ = tiny_web
-    seed_dir = str(tmp_path / "seeds_in")
-    out_dir = str(tmp_path / "out")
-    os.makedirs(seed_dir)
-    t = pq.read_table(web_dir + "/seeds.parquet")
-    pq.write_table(t, os.path.join(seed_dir, "batch0.parquet"))
-    pages_path = web_dir + "/pages.parquet"
-
-    q1 = ST.crawl_stream(spark, seed_dir, pages_path, out_dir,
-                         str(tmp_path / "ckpt1"), trigger_seconds=1).start()
-    q2 = ST.drain_discovered_stream(spark, pages_path, out_dir,
-                                    str(tmp_path / "ckpt2"),
-                                    trigger_seconds=1).start()
-    max_depth = 0
-    try:
-        deadline = time.time() + 150
-        while time.time() < deadline:
-            try:
-                ext = spark.read.parquet(os.path.join(out_dir, "extracted"))
-                max_depth = ext.agg(F.max("depth")).collect()[0][0] or 0
-                if max_depth >= 2:
-                    break
-            except Exception:
-                pass
-            time.sleep(3)
-    finally:
-        q1.stop()
-        q2.stop()
-    assert max_depth >= 2, max_depth
-
-    ext = spark.read.parquet(os.path.join(out_dir, "extracted"))
-    # the seen-set anti-join kept the drain loop from refetching: each
-    # drained URL was extracted at most once (seeds are extracted by q1,
-    # deeper levels by q2)
-    dup = (ext.filter("depth >= 1").groupBy("url")
-           .agg(F.count("*").alias("n")).filter("n > 1").count())
-    assert dup == 0
-    # byte-identity holds on the deep-crawl path too
-    pages = spark.read.parquet(pages_path)
-    bad = (ext.filter(F.col("text").isNotNull()).alias("e")
-           .join(pages.alias("p"), "url")
-           .filter(~F.col("e.text").eqNullSafe(F.col("p.text"))).count())
-    assert bad == 0
-
-
 def test_streaming_micro_batches_are_never_collected():
     """The de-collect contract (VERDICT r02 ask #4): micro-batch data in
-    streaming/ is pinned with localCheckpoint, never via driver-side
-    collect()+createDataFrame — a collect pin caps batch size at driver
-    memory, which the drain's unbounded depth>1 candidate sets would hit."""
+    streaming/ stays distributed, never pulled through a driver-side
+    collect() — a collect pin caps batch size at driver memory."""
     import inspect
 
     from new_ent_crawler_spark.streaming import stateful, stream
     for mod in (stream, stateful):
         src = inspect.getsource(mod)
         assert ".collect()" not in src, mod.__name__
-
-
-def test_streaming_drain_handles_large_batch(spark, tiny_web, tmp_path):
-    """A discovered/ batch of 120k URLs (far beyond what a driver-side pin
-    should ever hold) drains through the distributed localCheckpoint path:
-    every URL lands in extracted exactly once and in seen/."""
-    from new_ent_crawler_spark.streaming import stream as ST
-    web_dir, _ = tiny_web
-    out_dir = str(tmp_path / "out")
-    disc_dir = os.path.join(out_dir, "discovered")
-    os.makedirs(disc_dir)
-    n = 120_000
-    big = spark.range(n).select(
-        F.concat(F.lit("http://bulk.gsxt.example/p"), "id", F.lit(".html"))
-        .alias("url"),
-        F.lit("bulk.gsxt.example").alias("host"),
-        F.lit(None).cast("string").alias("company"),
-        F.col("id").alias("seed_id"),
-        F.lit(None).cast("string").alias("keyword"),
-        F.lit(1).alias("depth"), F.lit(0).alias("page_type_score"),
-        F.lit(0).alias("priority"), F.lit(0).alias("status"),
-        F.lit(0).alias("crawler_count"),
-        F.lit(0).cast("long").alias("enqueue_wave"))
-    big.coalesce(2).write.mode("append").parquet(disc_dir)
-
-    q = ST.drain_discovered_stream(spark, web_dir + "/pages.parquet",
-                                   out_dir, str(tmp_path / "ckpt"),
-                                   trigger_seconds=1).start()
-    try:
-        deadline = time.time() + 120
-        done = 0
-        while time.time() < deadline and done < n:
-            try:
-                done = spark.read.parquet(
-                    os.path.join(out_dir, "extracted")).count()
-            except Exception:
-                pass
-            time.sleep(2)
-    finally:
-        q.stop()
-    ext = spark.read.parquet(os.path.join(out_dir, "extracted"))
-    assert ext.count() == n
-    assert ext.select("url").distinct().count() == n
-    seen = spark.read.parquet(os.path.join(out_dir, "seen"))
-    assert seen.distinct().count() == n

@@ -2,7 +2,6 @@
 rollback/atomic commit/resume semantics)."""
 
 import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -79,26 +78,24 @@ def test_missing_table_raises(spark, tmp_path):
         t.read(spark)
 
 
-def _bucketed_fixture(spark, tmp_path, name):
-    """Base of 40 urls, two delta commits (10 updates + 5 inserts, then 5
-    updates overlapping both) -> expected LWW state computed by hand."""
-    from pyspark.sql import functions as F
-
-    from new_ent_crawler_spark.sources.snapshot import BucketedDeltaTable
-    t = BucketedDeltaTable(str(tmp_path / "bf"), name=name, key_col="url",
-                           buckets=8)
+def test_delta_merge_matches_lww_semantics(spark, tmp_path):
+    """DeltaTable.read resolves a base of 40 urls and two delta commits
+    (10 updates + 5 inserts, then 5 updates overlapping both) to the
+    last-writer-wins state computed by hand."""
+    from new_ent_crawler_spark.sources.snapshot import DeltaTable
+    t = DeltaTable(str(tmp_path / "lww"), key_col="url")
     base = spark.range(40).select(
         F.concat(F.lit("https://h/u"), "id").alias("url"),
         F.lit(0).alias("status"), F.lit("base").alias("src"))
-    t.overwrite(spark, base, version=0)
+    t.overwrite(base, meta={"wave": 0})
     d1 = spark.range(15).select(
         F.concat(F.lit("https://h/u"), (F.col("id") + 30)).alias("url"),
         F.lit(1).alias("status"), F.lit("d1").alias("src"))
-    t.append_delta(spark, d1, version=1)
+    t.append_delta(d1, version=1, meta={"wave": 1})
     d2 = spark.range(5).select(
         F.concat(F.lit("https://h/u"), (F.col("id") + 38)).alias("url"),
         F.lit(2).alias("status"), F.lit("d2").alias("src"))
-    t.append_delta(spark, d2, version=2)
+    t.append_delta(d2, version=2, meta={"wave": 2})
     expected = {}  # url -> (status, src)
     for i in range(40):
         expected[f"https://h/u{i}"] = (0, "base")
@@ -106,200 +103,6 @@ def _bucketed_fixture(spark, tmp_path, name):
         expected[f"https://h/u{i}"] = (1, "d1")
     for i in range(38, 43):
         expected[f"https://h/u{i}"] = (2, "d2")
-    return t, expected
-
-
-def test_bucketed_merge_matches_lww_semantics(spark, tmp_path):
-    from new_ent_crawler_spark.sources.snapshot import BucketedDeltaTable  # noqa: F401
-    t, expected = _bucketed_fixture(spark, tmp_path, "bft1")
     got = {r["url"]: (r["status"], r["src"])
            for r in t.read(spark).collect()}
     assert got == expected
-    t.drop(spark)
-
-
-def test_bucketed_merge_no_exchange(spark, tmp_path):
-    """The at-scale property: with both sides bucketed by the key, the
-    whole LWW merge (window + distinct + anti-join) keeps the scans'
-    HashPartitioning and the plan holds ZERO exchanges — no shuffle at any
-    frontier size.  Broadcast joins are disabled so the sandbox-size delta
-    can't hide the join behind a BroadcastExchange (at 10^10-frontier
-    scale a multi-million-row delta wouldn't broadcast anyway)."""
-    from tests.test_plans import plan_of
-    t, expected = _bucketed_fixture(spark, tmp_path, "bft2")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = t.read(spark)
-        plan = plan_of(df)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan and "LeftAnti" in plan
-        got = {r["url"]: (r["status"], r["src"]) for r in df.collect()}
-        assert got == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        t.drop(spark)
-
-
-def test_bucketed_register_fresh_session(spark, tmp_path):
-    """DROP the catalog entries (external tables keep their files), then
-    register() rebuilds them from the stored spec — the files survive a
-    session restart the way an Iceberg catalog table would."""
-    t, expected = _bucketed_fixture(spark, tmp_path, "bft3")
-    spark.sql(f"DROP TABLE {t.base_table}")
-    spark.sql(f"DROP TABLE {t.delta_table}")
-    t.register(spark)
-    got = {r["url"]: (r["status"], r["src"])
-           for r in t.read(spark).collect()}
-    assert got == expected
-    # registration restored the BUCKETED layout, not a plain scan: the
-    # no-exchange merge property must survive re-registration
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        assert "Exchange" not in __import__(
-            "tests.test_plans", fromlist=["plan_of"]).plan_of(t.read(spark))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        t.drop(spark)
-
-
-def test_bucketed_append_after_catalog_loss_keeps_old_deltas(spark, tmp_path):
-    """append_delta in a fresh session (catalog empty, delta files on
-    disk) must re-register and APPEND — not let saveAsTable's create-path
-    overwrite clobber the existing delta files."""
-    from pyspark.sql import functions as F
-    t, expected = _bucketed_fixture(spark, tmp_path, "bft4")
-    spark.sql(f"DROP TABLE {t.base_table}")
-    spark.sql(f"DROP TABLE {t.delta_table}")   # files stay (external)
-    d3 = spark.range(2).select(
-        F.concat(F.lit("https://h/u"), F.col("id")).alias("url"),
-        F.lit(3).alias("status"), F.lit("d3").alias("src"))
-    t.append_delta(spark, d3, version=3)
-    for i in range(2):
-        expected[f"https://h/u{i}"] = (3, "d3")
-    got = {r["url"]: (r["status"], r["src"])
-           for r in t.read(spark).collect()}
-    assert got == expected
-    t.drop(spark)
-
-
-def test_bucketed_read_then_overwrite_compaction(spark, tmp_path):
-    """The compaction shape its docstring invites: overwrite(read()) must
-    materialize the new base BEFORE dropping the old files — the lazy
-    input plan must never scan already-deleted files (found live: the
-    pre-fix code lost the whole table on this call)."""
-    t, expected = _bucketed_fixture(spark, tmp_path, "bft5")
-    t.overwrite(spark, t.read(spark), version=9)
-    got = {r["url"]: (r["status"], r["src"])
-           for r in t.read(spark).collect()}
-    assert got == expected
-    # deltas are folded in: the read is now a pure bucketed base scan
-    assert not spark.catalog.tableExists(t.delta_table)
-    t.drop(spark)
-
-
-def test_bucketed_read_in_fresh_session_self_registers(spark, tmp_path):
-    """read() after catalog loss (fresh session) must re-register from the
-    stored spec instead of raising TABLE_OR_VIEW_NOT_FOUND — including the
-    base-only layout (no deltas dir)."""
-    from pyspark.sql import functions as F
-
-    from new_ent_crawler_spark.sources.snapshot import BucketedDeltaTable
-    t = BucketedDeltaTable(str(tmp_path / "bo"), name="bft6",
-                           key_col="url", buckets=4)
-    base = spark.range(10).select(
-        F.concat(F.lit("u"), "id").alias("url"), F.lit(0).alias("status"))
-    t.overwrite(spark, base, version=0)
-    spark.sql(f"DROP TABLE {t.base_table}")      # catalog loss, files stay
-    assert t.read(spark).count() == 10           # self-registers
-    spark.sql(f"DROP TABLE {t.base_table}")
-    d1 = spark.range(3).select(
-        F.concat(F.lit("u"), "id").alias("url"), F.lit(1).alias("status"))
-    t.append_delta(spark, d1, version=1)         # base-only + new deltas
-    rows = {r["url"]: r["status"] for r in t.read(spark).collect()}
-    assert rows == {f"u{i}": (1 if i < 3 else 0) for i in range(10)}
-    t.drop(spark)
-
-
-def test_bucketed_name_collision_with_different_path_raises(spark, tmp_path):
-    """Two instances sharing a catalog name but not a path must refuse to
-    serve each other's files (ADVICE r04: the second instance's
-    read/append/drop silently cross-wired through the session-global
-    catalog entries)."""
-    from pyspark.sql import functions as F
-
-    from new_ent_crawler_spark.sources.snapshot import BucketedDeltaTable
-    a = BucketedDeltaTable(str(tmp_path / "pa"), name="bft7",
-                           key_col="url", buckets=4)
-    base = spark.range(5).select(
-        F.concat(F.lit("u"), "id").alias("url"), F.lit(0).alias("status"))
-    a.overwrite(spark, base, version=0)
-    b = BucketedDeltaTable(str(tmp_path / "pb"), name="bft7",
-                           key_col="url", buckets=4)
-    with pytest.raises(ValueError, match="share the name"):
-        b.read(spark)
-    with pytest.raises(ValueError, match="share the name"):
-        b.append_delta(spark, base, version=1)
-    with pytest.raises(ValueError, match="share the name"):
-        b.drop(spark)
-    assert a.read(spark).count() == 5  # instance a is untouched
-    a.drop(spark)
-
-
-def test_bucketed_delta_before_base_survives_catalog_loss(spark, tmp_path):
-    """append_delta on a brand-new table (no overwrite yet) must persist
-    the bucket spec so a fresh session can re-register the delta files
-    (ADVICE r04: they were stranded, read() raised
-    TABLE_OR_VIEW_NOT_FOUND)."""
-    from pyspark.sql import functions as F
-
-    from new_ent_crawler_spark.sources.snapshot import BucketedDeltaTable
-    t = BucketedDeltaTable(str(tmp_path / "db"), name="bft8",
-                           key_col="url", buckets=4)
-    d = spark.range(7).select(
-        F.concat(F.lit("u"), "id").alias("url"), F.lit(1).alias("status"))
-    t.append_delta(spark, d, version=1)
-    spark.sql(f"DROP TABLE {t.delta_table}")     # catalog loss, files stay
-    rows = {r["url"] for r in t.read(spark).collect()}
-    assert rows == {f"u{i}" for i in range(7)}
-    t.drop(spark)
-
-
-def test_bucketed_overwrite_keeps_a_copy_until_promoted(spark, tmp_path):
-    """The compaction swap renames the old base aside and deletes it only
-    after the new base + spec are in place: at no point between the save
-    and the promote is the data's only copy gone (ADVICE r04: the old
-    rmtree-then-rename window could lose the table on a crash)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from new_ent_crawler_spark.sources.snapshot import BucketedDeltaTable
-    t = BucketedDeltaTable(str(tmp_path / "ow"), name="bft9",
-                           key_col="url", buckets=4)
-    base = spark.range(6).select(
-        F.concat(F.lit("u"), "id").alias("url"), F.lit(0).alias("status"))
-    t.overwrite(spark, base, version=0)
-    # simulate the crash window: if os.rename of the new dir fails, the
-    # old base must still exist (renamed aside, not rmtree'd)
-    real_rename = os.rename
-    renames = []
-
-    def failing_rename(src, dst):
-        renames.append((src, dst))
-        if "base_new_" in src:
-            raise OSError("injected crash before promote")
-        return real_rename(src, dst)
-
-    import unittest.mock as mock
-    with mock.patch("os.rename", side_effect=failing_rename):
-        with pytest.raises(OSError, match="injected"):
-            t.overwrite(spark, base.withColumn("status", F.lit(9)),
-                        version=1)
-    # data survives: exactly one complete copy under base_old_* plus the
-    # new one under base_new_* — nothing was deleted
-    subdirs = os.listdir(t.path)
-    assert any(s.startswith("base_old_") for s in subdirs)
-    assert any(s.startswith("base_new_") for s in subdirs)
-    t.drop(spark)

@@ -146,19 +146,25 @@ def test_resume_from_checkpoint(spark, tiny_web, tmp_path_factory):
     assert resumed.crawl_order() == full.crawl_order()
 
 
-def test_cuckoo_seen_filter_equivalence(crawl, spark, tiny_web,
-                                        tmp_path_factory):
-    """seen_filter="cuckoo" (the north_star's deletion-capable alternative
-    to the Bloom) must yield an identical crawl: same seen set, same crawl
-    order — the filter only ever prunes the exact anti-join."""
-    eng, _, _ = crawl
+def test_add_seeds_joins_frontier_and_bloom(spark, tiny_web, tmp_path):
+    """Seeds added to a running crawl: the URLs the frontier lacks enter as
+    one pending delta at the current wave and go into the Bloom — a seed
+    missing from it would let a later link to the seed pass as new."""
     web_dir, _ = tiny_web
-    work = str(tmp_path_factory.mktemp("cuckoo_work"))
-    c = WaveEngine(spark, web_dir, work, per_host_k=8, max_waves=30,
-                   expected_total_urls=10_000, seen_filter="cuckoo")
-    c.run()
-    assert c.seen_urls() == eng.seen_urls()
-    assert c.crawl_order() == eng.crawl_order()
+    seeds = spark.read.parquet(web_dir + "/seeds.parquet")
+    eng = WaveEngine(spark, web_dir, str(tmp_path), per_host_k=8,
+                     max_waves=1, expected_total_urls=10_000)
+    eng.add_seeds(seeds.filter("seed_id % 2 = 0"))
+    eng.drain()
+    assert eng.last_wave() == 1 and eng._bloom is not None
+    eng.add_seeds(seeds)  # half of these are in the frontier already
+    late = [r.seed_url for r in seeds.filter("seed_id % 2 = 1").collect()]
+    snap = eng.frontier_t.current_snapshot()
+    assert snap["meta"]["wave"] == 1
+    assert eng.frontier_t.dir_rows(snap["dirs"][-1]) == len(late)
+    assert all(eng._bloom.might_contain(u) for u in late)
+    rows = {r.url: (r.status, r.depth) for r in eng.frontier().collect()}
+    assert all(rows[u] == (0, 0) for u in late)
 
 
 def test_delta_frontier_compaction_equivalence(spark, tiny_web,
