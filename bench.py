@@ -478,15 +478,8 @@ def run_parse_stage(cpus: int, web_dir: str, tag: str,
             F.lit(0).cast("int").alias("crawler_count"))
 
     rows = project(pages)
-    # Arrow batch sizing from parquet FOOTERS (driver-side ms).  The
-    # sampling fallback's `limit(512)` job is NOT cheap here: LocalLimit
-    # applies per split, and with 16 MB splits every split holds < 512
-    # rows, so the "sample" decompressed the html column of the ENTIRE
-    # corpus — ~100 s of untimed overhead on the pinned 1-core leg (r04
-    # parse_n wall 385 s vs 189 s timed), budget that the gate-critical
-    # 4N samples then couldn't use.
-    if PS.tune_arrow_batch_from_footer(spark, pq) is None:
-        PS.tune_arrow_batch(spark, pages)
+    # Arrow batch sizing from parquet FOOTERS (driver-side ms, no scan)
+    PS.tune_arrow_batch(spark, pq)
 
     def one_pass():
         _exec(PS.parse_pages(rows).select("url", "status", "text", "links"))

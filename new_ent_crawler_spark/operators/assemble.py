@@ -143,12 +143,17 @@ def main_url_record(assembled: DataFrame) -> DataFrame:
         "create_time")
 
 
-def exact_match_updates(assembled: DataFrame, seeds_frontier: DataFrame) -> DataFrame:
-    """status=5 updates for seed listing rows whose first result's name
-    equals the keyword (worker/worker.py:237-242)."""
+def exact_match_updates(assembled: DataFrame, frontier: DataFrame) -> DataFrame:
+    """Full frontier rows upgrading seed listings to status 5 where the
+    first result's name equals the keyword (worker/worker.py:237-242): one
+    more attempt on ``crawler_count``, like any status update, ready to
+    commit as a frontier delta."""
     matches = (assembled.filter(F.col("exact_match"))
                .select("seed_id").distinct())
-    return (seeds_frontier
+    return (frontier
             .filter(F.col("depth") == 0)
             .join(matches, "seed_id", "inner")
-            .select("url", F.lit(FR.STATUS_EXACT).alias("status")))
+            .withColumn("status", F.lit(FR.STATUS_EXACT))
+            .withColumn("crawler_count",
+                        (F.col("crawler_count") + 1).cast("int"))
+            .select(*FR.FRONTIER_COLS))

@@ -21,13 +21,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# status codes follow the reference (worker/worker.py:206,240-242)
-STATUS_PENDING = 0
-STATUS_ERROR = 1
-STATUS_IN_FLIGHT = 2
-STATUS_FOUND = 3
-STATUS_NOT_FOUND = 4
-STATUS_EXACT = 5
+from ..oracle import urlspec as U
+from ..oracle.urlspec import (STATUS_ERROR, STATUS_EXACT,  # noqa: F401
+                              STATUS_FOUND, STATUS_IN_FLIGHT,
+                              STATUS_NOT_FOUND, STATUS_PENDING)
 
 FRONTIER_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -61,7 +58,6 @@ def init_frontier(seeds: DataFrame) -> DataFrame:
     lanes, FIFO by seed_id (Redis rpush order) encoded as enqueue_wave=0 plus
     the deterministic url tiebreak.
     """
-    from ..oracle import urlspec as U
     return seeds.select(
         F.col("seed_url").alias("url"),
         F.col("host"),
@@ -87,7 +83,6 @@ def init_frontier_pa(seeds):
     the Spark path."""
     import pyarrow as pa
 
-    from ..oracle import urlspec as U
     n = seeds.num_rows
 
     def const(v, t):
@@ -116,10 +111,9 @@ def _order_cols():
 
 def eligibility_predicate(max_attempts: int = 3):
     """The single definition of "this row can still be claimed".  Used by
-    both ``dequeue`` and the wave engine's fused pending head-count — a
-    second hand-written copy once drifted (it dropped the host null check,
-    so null-host rows kept pending>0 forever while claimed stayed 0 and the
-    run spun refill-only waves until max_waves)."""
+    both ``dequeue`` and the wave engine's fused pending head-count, so the
+    two cannot disagree: a null-host row counted as pending but never
+    claimable would spin refill-only waves until max_waves."""
     return ((F.col("status") < STATUS_IN_FLIGHT)
             & (F.col("crawler_count") < max_attempts)
             & F.col("host").isNotNull())
@@ -154,21 +148,3 @@ def dequeue(frontier: DataFrame, budgets: DataFrame,
             .withColumn("rank", F.row_number().over(w2))
             .filter(F.col("rank") <= F.col("grant"))
             .drop("salt", "url_key", "grant"))
-
-
-def merge_status(frontier: DataFrame, updates: DataFrame) -> DataFrame:
-    """MERGE-style status update keyed by url (stand-in for Iceberg
-    ``MERGE INTO frontier USING updates ON url``; the reference's analogue
-    is updateKeywordState, utils/MysqlDBHelper.py:133-146)."""
-    upd = updates.select(F.col("url").alias("u_url"),
-                         F.col("status").alias("u_status"))
-    return (frontier.join(upd, frontier["url"] == upd["u_url"], "left")
-            .select(
-                *[F.col(c) for c in FRONTIER_COLS if c not in
-                  ("status", "crawler_count")],
-                F.coalesce("u_status", "status").alias("status"),
-                F.when(F.col("u_status").isNotNull(),
-                       F.col("crawler_count") + 1)
-                 .otherwise(F.col("crawler_count"))
-                 .cast("int").alias("crawler_count"),
-            ))

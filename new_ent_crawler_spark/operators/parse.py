@@ -5,21 +5,17 @@ UDFs — no per-row Python UDFs in the plan.  One ``mapInPandas`` stage owns
 all byte-level extraction (SURVEY.md §2.10): it consumes Arrow batches of
 (claimed frontier row ⋈ pages.html) and emits per-URL
 
-* ``status``  — listing found/not_found/error codes (worker/worker.py:206)
-  or done/error for detail pages,
-* ``text``    — the extracted text whose bytes are judged against the golden
-  ``pages.text`` column (oracle ``extract_url_text``),
-* ``links``   — discovered out-links with page-type scores and the company
-  key propagated down the crawl tree (oracle ``discover_links``).
+``status``, ``blocked``, ``text`` and ``links`` — the page rule of
+``oracle.urlspec.analyze``, whose text bytes are judged against the golden
+``pages.text`` column.
 
 The "fetch" itself is the join against the ``pages`` table upstream of this
 stage (the table *is* the web, SURVEY.md §2.1); a NULL html means the fetch
-failed -> status error, no links.
+failed.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -41,10 +37,8 @@ PARSED_SCHEMA = T.StructType([
     T.StructField("page_type_score", T.IntegerType(), True),
     T.StructField("enqueue_wave", T.LongType(), True),
     # pass-through: carrying the attempt counter through the parse lets the
-    # wave's frontier delta be SELECTed straight off the parse output —
-    # without it the engine needed a claimed⋈parsed shuffle join per wave
-    # just to reunite status with crawler_count (measured ~1 s/wave of the
-    # non-scaling per-wave fixed cost at 16 threads)
+    # wave's frontier delta be SELECTed straight off the parse output, with
+    # no claimed⋈parsed shuffle join to reunite status with crawler_count
     T.StructField("crawler_count", T.IntegerType(), True),
     T.StructField("status", T.IntegerType(), True),
     T.StructField("blocked", T.BooleanType(), True),
@@ -57,85 +51,30 @@ PARSED_SCHEMA = T.StructType([
 ])
 
 
-def tune_arrow_batch(spark, pages: DataFrame, col: str = "html",
+def tune_arrow_batch(spark, parquet_path: str, col: str = "html",
                      target_mb: int = 16, lo: int = 64, hi: int = 4096,
-                     sample_rows: int = 512) -> int:
+                     max_files: int = 8) -> int:
     """Size Arrow batches by BYTES, not rows, for the parse UDF family.
 
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` is a row count, but
     what the pipeline actually pays for is bytes per batch: each batch is
     built JVM-side, pushed through the local socket, and materialized as
-    pandas objects.  At ~24 KB/page 1024 rows ≈ 25 MB and scales linearly;
-    at Common-Crawl-realistic ~144 KB/page the same 1024 rows is a 150 MB
-    slab per concurrent worker — measured 20% slower at BOTH 4 and 16
-    threads than ~16 MB batches on the same corpus (BENCH/BASELINE.md §1).
-    Spark 4 only honors a bytes cap for transformWithState, so this samples
-    the head of the pages table (one split, ``LIMIT sample_rows``) and sets
-    the row cap to approximate ``target_mb``.  Heterogeneous page sizes at
-    100 TB make a static row count wrong in both directions; re-tuning per
-    table keeps batch memory bounded.
-    """
-    avg = (pages.select(F.length(col).alias("n")).limit(sample_rows)
-           .agg(F.avg("n")).first()[0]) or 1.0
-    rows = int(max(lo, min(hi, (target_mb * 2**20) // max(int(avg), 1))))
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(rows))
-    return rows
-
-
-def tune_arrow_batch_from_footer(spark, parquet_path: str,
-                                 col: str = "html", target_mb: int = 16,
-                                 lo: int = 64, hi: int = 4096,
-                                 max_files: int = 8) -> int | None:
-    """Footer-metadata variant of ``tune_arrow_batch``: parquet column
-    chunks record the UNCOMPRESSED byte size of each column, so the mean
-    page size — all the tuner needs — is already sitting in the footers.
-    Reading a handful of them is a driver-side pyarrow call (~ms), where
-    the sampling job is a full Spark job (session-warmup priced, ~1-2 s)
-    paid once per crawl — pure per-run fixed cost, which is exactly what
-    caps the N->4N scaling ratio.  Returns None when the path isn't
-    footer-readable parquet (caller falls back to the sampling job).
+    pandas objects.  At ~144 KB/page 1024 rows is a 150 MB slab per
+    concurrent worker, slower than ~16 MB batches (BENCH/BASELINE.md §1).
+    Spark 4 only honors a bytes cap for transformWithState, so the row cap
+    comes from the mean UNCOMPRESSED ``col`` bytes per row recorded in the
+    parquet footers (a driver-side read, no Spark job) and is set to
+    approximate ``target_mb``.  Raises ValueError when the footers give no
+    ``col`` size.
     """
     from ..parquet_meta import mean_column_bytes
     avg = mean_column_bytes(parquet_path, col, max_files=max_files)
     if avg is None:
-        return None
+        raise ValueError(f"no {col!r} column size in the parquet footers "
+                         f"of {parquet_path}")
     rows = int(max(lo, min(hi, (target_mb * 2**20) // max(int(avg), 1))))
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(rows))
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(rows))
     return rows
-
-
-def _parse_one(url, host, company, html_bytes):
-    """(status, text, links, blocked) for one fetched page."""
-    if html_bytes is None:
-        return FR.STATUS_ERROR, None, [], False
-    content = bytes(html_bytes).decode("utf-8")
-    kind, _ = U.classify(url)
-    # block/ban detector (worker/worker.py:196) -> host cool-down instead of
-    # the reference's ADSL redial
-    from ..oracle import extract as X0
-    if X0.BLOCK_MARKER in content or X0.INVALID_LINK_MARKER in content:
-        return FR.STATUS_ERROR, None, [], True
-    text = U.extract_url_text(url, content)
-
-    status = FR.STATUS_FOUND
-    if kind == "listing":
-        from ..oracle import extract as X
-        r = X.parse_listing(content)
-        if r is None:
-            status = FR.STATUS_ERROR
-        elif r == "not_found":
-            status = FR.STATUS_NOT_FOUND
-
-    links = []
-    for rel, score in U.discover_links(url, content):
-        absolute = U.canonicalize(rel, host)
-        # company key propagation: a listing's out-link IS the company main
-        # page; everything below inherits the parent's company
-        link_company = absolute if kind == "listing" else company
-        links.append({"url": absolute, "score": score,
-                      "company": link_company})
-    return status, text, links, False
 
 
 def parse_pages(fetched: DataFrame) -> DataFrame:
@@ -143,21 +82,18 @@ def parse_pages(fetched: DataFrame) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            statuses, texts, links_col, blocked_col = [], [], [], []
-            for url, host, company, html in zip(
-                    pdf["url"], pdf["host"], pdf["company"], pdf["html"]):
-                s, t, l, blk = _parse_one(url, host, company, html)
-                statuses.append(s)
-                texts.append(t)
-                links_col.append(l)
-                blocked_col.append(blk)
+            rows = [U.analyze(url, host, company,
+                              None if html is None
+                              else bytes(html).decode("utf-8"))
+                    for url, host, company, html in zip(
+                        pdf["url"], pdf["host"], pdf["company"], pdf["html"])]
             out = pdf[["url", "host", "company", "seed_id", "keyword",
                        "depth", "priority", "page_type_score",
                        "enqueue_wave", "crawler_count"]].copy()
-            out["status"] = pd.Series(statuses, dtype="int32")
-            out["blocked"] = pd.Series(blocked_col, dtype="bool")
-            out["text"] = texts
-            out["links"] = links_col
+            out["status"] = pd.Series([r[0] for r in rows], dtype="int32")
+            out["blocked"] = pd.Series([r[1] for r in rows], dtype="bool")
+            out["text"] = [r[2] for r in rows]
+            out["links"] = [r[3] for r in rows]
             yield out
 
     return fetched.mapInPandas(run, schema=PARSED_SCHEMA)

@@ -63,42 +63,15 @@ def init_budgets_pd(robots_pdf, per_wave_k: int,
     })
 
 
-def wave_grants(budgets: DataFrame) -> DataFrame:
-    """(host, grant) for this wave's dequeue."""
-    return budgets.select(
-        "host", F.floor("tokens").cast("int").alias("grant"))
-
-
-def spend_and_refill(budgets: DataFrame, used: DataFrame,
-                     blocked_hosts: DataFrame | None = None) -> DataFrame:
-    """tokens' = min(capacity, tokens - used + refill); blocked hosts reset
-    to 0 (cool-down)."""
-    u = used.groupBy("host").agg(F.count("*").cast("double").alias("used"))
-    out = (budgets.join(u, "host", "left")
-           .withColumn("tokens",
-                       F.least(F.col("capacity"),
-                               F.col("tokens") - F.coalesce("used", F.lit(0.0))
-                               + F.col("refill_rate")))
-           .drop("used"))
-    if blocked_hosts is not None:
-        b = blocked_hosts.select("host").distinct().withColumn("_blk", F.lit(1))
-        out = (out.join(b, "host", "left")
-               .withColumn("tokens", F.when(F.col("_blk") == 1, F.lit(0.0))
-                           .otherwise(F.col("tokens")))
-               .drop("_blk"))
-    return out
-
-
-# -- driver-side (pandas) twins ---------------------------------------------
+# -- driver-side (pandas) budget state --------------------------------------
 #
 # Budgets are broadcast into the dequeue join, so by construction the whole
-# budgets table fits on the driver; managing its state there turns two Spark
-# jobs per wave (join+write) into vectorized pandas plus a metadata-sized
-# parquet write.  The formulas are the exact twins of the Spark versions
-# above (which remain the API for distributed callers and tests).
+# budgets table fits on the driver; managing its state there keeps each
+# wave's grant and spend to vectorized pandas plus a metadata-sized parquet
+# write, with no Spark job.
 
 def grants_pd(budgets_pdf):
-    """pandas twin of wave_grants: (host, grant int)."""
+    """(host, grant int): this wave's dequeue slots, floor(tokens)."""
     import numpy as np
     out = budgets_pdf[["host"]].copy()
     out["grant"] = np.floor(budgets_pdf["tokens"]).astype("int32")
@@ -106,8 +79,8 @@ def grants_pd(budgets_pdf):
 
 
 def spend_and_refill_pd(budgets_pdf, used: dict, blocked=frozenset()):
-    """pandas twin of spend_and_refill: tokens' = min(capacity,
-    tokens - used + refill); blocked hosts reset to 0."""
+    """tokens' = min(capacity, tokens - used + refill); blocked hosts
+    reset to 0 (cool-down).  ``used``: host -> claims this wave."""
     import numpy as np
     out = budgets_pdf.copy()
     u = out["host"].map(used).fillna(0.0).astype("float64")

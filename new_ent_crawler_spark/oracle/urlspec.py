@@ -1,10 +1,12 @@
 """URL grammar of the simulated registry web + per-URL extraction dispatch.
 
-The engine's unit of work is a URL.  This module is the single source of
-truth for three pure functions shared by the synthetic-web generator, the
-single-threaded reference simulator, and the Spark Arrow UDFs:
+The engine's unit of work is a URL.  This module is the one place that
+knows what a fetched page yields, shared by the synthetic-web generator,
+the single-threaded reference simulator, and the Spark Arrow UDFs:
 
 * ``classify(url)``        -> (kind, detail) page classification
+* ``analyze``              -> (status, blocked, text, links) of one fetched
+                              page, its payload decoded once
 * ``extract_url_text``     -> the golden extracted text for one page (the
                               byte-identity invariant per BASELINE.json
                               ``input_hint``)
@@ -29,6 +31,16 @@ import re
 
 from . import entities as E
 from . import extract as X
+
+# frontier row status codes, following the reference
+# (worker/worker.py:206,240-242); ``analyze`` decides error / found /
+# not_found for a fetched page
+STATUS_PENDING = 0
+STATUS_ERROR = 1
+STATUS_IN_FLIGHT = 2
+STATUS_FOUND = 3
+STATUS_NOT_FOUND = 4
+STATUS_EXACT = 5
 
 # page-type scores: listing before detail (BASELINE.json north_star; the
 # reference fetches the listing at worker/worker.py:190 before the detail
@@ -132,83 +144,76 @@ def page_type_score(url):
     return SCORE_CHILD
 
 
-def analyze(url, content):
-    """Single-pass page analysis: (extracted_text, links).
+def _loads(content, typ):
+    """``json.loads(content)`` when it decodes to a ``typ``, else None."""
+    try:
+        value = json.loads(content)
+    except (TypeError, ValueError):
+        return None
+    return value if isinstance(value, typ) else None
 
-    Parses the payload once and derives both the golden per-URL text and the
-    out-links — the hot path of the engine's Arrow parse stage.  Equivalent
-    to (``extract_url_text(url, content)``, ``discover_links(url, content)``)
-    by construction (tested in tests/test_oracle.py).
+
+def _recipe(kind, detail):
+    """(rows kind, model, modelname) of a section or report-child page."""
+    return (_SLUG_TO_SECTION if kind == "section" else REPORT_CHILDREN)[detail]
+
+
+def _decode(kind, detail, content):
+    """The one parse of a page's payload.
+
+    listing -> ``parse_listing`` result; main -> ``get_urls`` vars;
+    mort_child -> the JSON object or None; section/report child ->
+    (rows or None, totalPage) — a report head's JSON list, a report base's
+    non-empty JSON object, else the ``parse_envelope`` pair.
     """
-    return extract_url_text(url, content), discover_links(url, content)
-
-
-def _section_rows(kind, model, data):
-    if kind in ("extract", "mortgage", "graph"):
-        return [X.map_row(model, m) for m in data]
-    if kind == "report_head":
-        return [X.map_row(E.REP_HEAD, m) for m in data]
-    if kind == "invest_bus":
-        return [X.map_investor_row("bus", m) for m in data]
-    if kind == "invest_ent":
-        return [X.map_investor_row("ent", m) for m in data]
-    if kind == "invest_rep":
-        return [X.map_investor_row("rep", m) for m in data]
-    raise ValueError(kind)
-
-
-def extract_url_text(url, content):
-    """Golden per-URL extracted text: what the reference parser extracts from
-    this single document, serialized with ``json.dumps`` defaults (matching
-    the reference's sink serialization, utils/MysqlDBHelper.py:34-44)."""
-    kind, detail = classify(url)
     if kind == "listing":
-        return json.dumps(X.parse_listing(content))
+        return X.parse_listing(content)
+    if kind == "main":
+        return X.get_urls(content)
+    if kind == "mort_child":
+        return _loads(content, dict)
+    if kind in ("section", "report_child"):
+        rkind = _recipe(kind, detail)[0]
+        if rkind == "report_head":
+            return _loads(content, list), None
+        if rkind == "report_base":
+            return _loads(content, dict) or None, None
+        return X.parse_envelope(content)
+    return None
+
+
+def _section_rows(rkind, model, data):
+    if rkind == "report_base":
+        return {"general": {f: data.get(E.REP_BASE.get(f)) for f in E.REP_BASE},
+                "operation": {f: data.get(E.REP_OPERATION.get(f))
+                              for f in E.REP_OPERATION}}
+    if rkind.startswith("invest_"):
+        return [X.map_investor_row(rkind.removeprefix("invest_"), m)
+                for m in data]
+    return [X.map_row(model, m) for m in data]
+
+
+_MORT_CHILD_ROWS = {"mortgagers": X.map_mortgager_row,
+                    "pawns": X.map_pawn_row, "obligee": X.map_obligee_row}
+
+
+def _text(kind, detail, content, page):
+    """Golden text of a decoded page: what the reference parser extracts
+    from this single document, serialized with ``json.dumps`` defaults
+    (matching the reference's sink serialization,
+    utils/MysqlDBHelper.py:34-44)."""
+    if kind == "listing":
+        return json.dumps(page)
     if kind == "main":
         return json.dumps({"base": X.get_bus_base_info(content),
-                           "urls": X.get_urls(content)})
-    if kind == "mort_child":
-        try:
-            data = json.loads(content).get("data")
-        except Exception:
-            return json.dumps(None)
-        mapper = {"mortgagers": X.map_mortgager_row, "pawns": X.map_pawn_row,
-                  "obligee": X.map_obligee_row}[detail]
-        return json.dumps([mapper(m) for m in (data or [])])
-    if kind == "report_child":
-        rkind, model, _ = REPORT_CHILDREN[detail]
-        if rkind == "report_base":
-            try:
-                message = json.loads(content)
-            except Exception:
-                return json.dumps(None)
-            if isinstance(message, dict) and len(message) > 0:
-                general = {f: message.get(E.REP_BASE.get(f)) for f in E.REP_BASE}
-                operation = {f: message.get(E.REP_OPERATION.get(f))
-                             for f in E.REP_OPERATION}
-                return json.dumps({"general": general, "operation": operation})
-            return json.dumps(None)
-        if rkind == "invest_rep":
-            rkind_tag = "invest_rep"
-        data, _tp = X.parse_envelope(content)
-        if data is None:
-            return json.dumps(None)
-        return json.dumps(_section_rows(rkind, model, data))
-    if kind == "section":
-        skind, model, _ = _SLUG_TO_SECTION[detail]
-        if skind == "report_head":
-            try:
-                message = json.loads(content)
-            except Exception:
-                return json.dumps(None)
-            if not isinstance(message, list):
-                return json.dumps(None)
-            return json.dumps(_section_rows("report_head", None, message))
-        data, _tp = X.parse_envelope(content)
-        if data is None:
-            return json.dumps(None)
-        return json.dumps(_section_rows(skind, model, data))
-    return json.dumps(None)
+                           "urls": page})
+    value = None
+    if kind == "mort_child" and page is not None:
+        value = [_MORT_CHILD_ROWS[detail](m) for m in (page.get("data") or [])]
+    elif kind in ("section", "report_child") and page[0] is not None:
+        rkind, model, _ = _recipe(kind, detail)
+        value = _section_rows(rkind, model, page[0])
+    return json.dumps(value)
 
 
 def _pagination_starts(kind, modelname, total_page):
@@ -234,8 +239,8 @@ def _pagination_starts(kind, modelname, total_page):
     return starts
 
 
-def discover_links(url, content):
-    """Out-links of one fetched page as (relative_or_absolute_url, score)
+def _links(kind, detail, url, page):
+    """Out-links of a decoded page as (relative_or_absolute_url, score)
     pairs, deduplicated, in discovery order.
 
     Mirrors the reference's crawl tree: listing -> first detail URL
@@ -244,74 +249,77 @@ def discover_links(url, content):
     page -> pagination pages plus mortgage children keyed ``morReg_Id``
     (:601-660) and report children keyed ``anCheId`` (:288-337).
     """
-    kind, detail = classify(url)
-    out = []
-    seen = set()
-
-    def add(u, score):
-        if u not in seen:
-            seen.add(u)
-            out.append((u, score))
-
     if kind == "listing":
-        r = X.parse_listing(content)
-        if isinstance(r, list):
-            add(r[0], SCORE_MAIN)
-        return out
-
+        return [(page[0], SCORE_MAIN)] if isinstance(page, list) else []
     if kind == "main":
-        urls = X.get_urls(content)
-        if urls is None or len(urls) < 10:
-            return out
-        for var in SECTIONS:
-            u = urls.get(var)
-            if u:
-                add(u, SCORE_SECTION)
-        return out
-
+        if page is None or len(page) < 10:
+            return []
+        rels = [page.get(var) for var in SECTIONS]
+        return [(u, SCORE_SECTION) for u in dict.fromkeys(rels) if u]
+    if kind not in ("section", "report_child") or page[0] is None:
+        return []
+    rkind, _, modelname = _recipe(kind, detail)
+    data, total_page = page
     _, path, query = split_url(url)
-    base = path  # host-relative page-1 url
+    rels = []
+    if not query:  # pagination fan-out only from page 1
+        rels += [path + "?start=" + str(start)
+                 for start in _pagination_starts(rkind, modelname, total_page)
+                 if start > 0]
+    if rkind == "mortgage" and isinstance(data, list):
+        for tmsg in data:
+            mort_id = tmsg.get("morReg_Id")
+            if mort_id is not None:
+                rels += [stem + str(mort_id) + ".html"
+                         for stem in E.MORTGAGE_URL_STEMS.values()]
+    if rkind == "report_head":
+        for tmsg in data:
+            an_che_id = tmsg.get("anCheId")
+            if an_che_id is not None:
+                rels += [stem + an_che_id + ".html"
+                         for stem in E.REPORT_URL_STEMS.values()]
+    return [(u, SCORE_CHILD) for u in dict.fromkeys(rels)]
 
-    if kind == "section":
-        skind, model, modelname = _SLUG_TO_SECTION[detail]
-        if skind == "report_head":
-            try:
-                message = json.loads(content)
-            except Exception:
-                return out
-            if isinstance(message, list):
-                for tmsg in message:
-                    an_che_id = tmsg.get("anCheId")
-                    if an_che_id is not None:
-                        for key, stem in E.REPORT_URL_STEMS.items():
-                            add(stem + an_che_id + ".html", SCORE_CHILD)
-            return out
-        data, total_page = X.parse_envelope(content)
-        if data is None:
-            return out
-        if not query:  # pagination fan-out only from page 1
-            for start in _pagination_starts(
-                    "graph" if skind == "graph" else "paged", modelname, total_page):
-                if start > 0:
-                    add(base + "?start=" + str(start), SCORE_CHILD)
-        if skind == "mortgage" and isinstance(data, list):
-            for tmsg in data:
-                mort_id = tmsg.get("morReg_Id")
-                if mort_id is not None:
-                    for stem in E.MORTGAGE_URL_STEMS.values():
-                        add(stem + str(mort_id) + ".html", SCORE_CHILD)
-        return out
 
-    if kind == "report_child":
-        rkind, model, modelname = REPORT_CHILDREN[detail]
-        if rkind in ("extract", "graph", "invest_rep") and not query:
-            data, total_page = X.parse_envelope(content)
-            if data is None:
-                return out
-            for start in _pagination_starts(
-                    "graph" if rkind == "graph" else "paged", modelname, total_page):
-                if start > 0:
-                    add(base + "?start=" + str(start), SCORE_CHILD)
-        return out
+def extract_url_text(url, content):
+    """Golden per-URL extracted text of one fetched page."""
+    kind, detail = classify(url)
+    return _text(kind, detail, content, _decode(kind, detail, content))
 
-    return out
+
+def discover_links(url, content):
+    """Out-links of one fetched page as (relative_or_absolute_url, score)
+    pairs, deduplicated, in discovery order."""
+    kind, detail = classify(url)
+    return _links(kind, detail, url, _decode(kind, detail, content))
+
+
+def analyze(url, host, company, content):
+    """What one fetched page yields: ``(status, blocked, text, links)``.
+
+    The page rule shared by the engine's Arrow parse and the simulator.
+    ``content`` None (the fetch failed) -> error, no text, no links.  A
+    block/ban page (worker/worker.py:196) -> error with ``blocked`` set, so
+    the host cools down instead of the reference's ADSL redial.  Otherwise
+    the payload is decoded once; ``text`` is ``extract_url_text``'s,
+    ``status`` the listing's found/not_found/error (worker/worker.py:206) or
+    found, and ``links`` the canonical absolute ``discover_links`` as
+    ``{url, score, company}`` dicts.
+    """
+    if content is None:
+        return STATUS_ERROR, False, None, []
+    if X.BLOCK_MARKER in content or X.INVALID_LINK_MARKER in content:
+        return STATUS_ERROR, True, None, []
+    kind, detail = classify(url)
+    page = _decode(kind, detail, content)
+    status = STATUS_FOUND
+    if kind == "listing" and not isinstance(page, list):
+        status = STATUS_ERROR if page is None else STATUS_NOT_FOUND
+    links = []
+    for rel, score in _links(kind, detail, url, page):
+        absolute = canonicalize(rel, host)
+        # company key propagation: a listing's out-link IS the company main
+        # page; everything below inherits the parent's company
+        links.append({"url": absolute, "score": score,
+                      "company": absolute if kind == "listing" else company})
+    return status, False, _text(kind, detail, content, page), links

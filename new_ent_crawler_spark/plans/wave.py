@@ -85,8 +85,7 @@ class WaveEngine:
         # O(frontier)); fold them into a fresh base every `compact_every`
         # waves so the read-side merge stays a broadcast-sized anti-join.
         # Cadence 8 balances write amplification (each compaction rewrites
-        # the whole frontier — event-log attributed ~4-7 s/leg on the
-        # bench crawl) against read amplification, which stays cheap
+        # the whole frontier) against read amplification, which stays cheap
         # between compactions because a wave's delta is <= 8 status-
         # homogeneous files whose min/max footer stats the eligibility
         # scan prunes on (see append_delta below).
@@ -106,7 +105,7 @@ class WaveEngine:
         self.extracted_t = SnapshotTable(os.path.join(work_dir, "extracted"))
         self.lineage_t = SnapshotTable(os.path.join(work_dir, "lineage"))
         self._bloom: DD.BloomFilter | None = None
-        # sampled mean page size (set by run()'s batch tuning; sizes the
+        # mean page size (set by drain()'s Arrow batch tuning; sizes the
         # pruned-scan coalesce)
         self._avg_page_bytes = 24 * 1024
         # pages-scan split count, planned once on the first wave (a session
@@ -326,8 +325,7 @@ class WaveEngine:
         if 0 < len(url_bounds) <= 256:
             # ONE parsed SQL expression instead of a Column-algebra fold:
             # per-host Column ops cost 2 py4j round trips per range per
-            # wave (~0.5 s of driver-serial chatter at 256 hosts) — pure
-            # fixed cost on every leg size
+            # wave — driver-serial fixed cost on every leg size
             def _q(s: str) -> str:
                 return s.replace("\\", "\\\\").replace("'", "\\'")
             bound_pred = F.expr(" OR ".join(
@@ -345,8 +343,8 @@ class WaveEngine:
         # the scan split count is a session constant (file splits are sized
         # before the per-wave pruning filter runs), but .rdd forces a full
         # analysis->physical-planning pass that the later action re-does and
-        # discards — ~1 s of driver-serial DAG build PER WAVE, pure fixed
-        # cost that no parallelism removes.  Plan it once, reuse the count.
+        # discards — driver-serial fixed cost that no parallelism removes.
+        # Plan it once, reuse the count.
         if self._scan_parts is None:
             self._scan_parts = hits.rdd.getNumPartitions()
         src_parts = self._scan_parts
@@ -376,12 +374,9 @@ class WaveEngine:
         # extracted text (judged bytes) + crawl-order log columns.  The
         # append is the wave's ONE materialization of the parse (it also
         # fills the cache); the hit count then comes free from the written
-        # parquet footers, so the fetch-miss branch below is built ONLY when
-        # a claim actually missed.  The old unconditional path paid a
-        # driver-serial broadcast build (parsed urls) + anti-join + union
-        # per wave even though the common wave has zero misses — pure fixed
-        # cost that no parallelism removes, and fixed cost is what caps the
-        # N->4N scaling ratio.
+        # parquet footers, so the fetch-miss branch below (a driver-serial
+        # broadcast build + anti-join + union) is built ONLY when a claim
+        # actually missed; the common wave has zero misses.
         t0 = _t("px_plan", t0)  # driver-side DAG build up to the write job
         snap = self.extracted_t.append(_ext_cols(parsed_hits),
                                        meta={"wave": wave})
@@ -472,9 +467,8 @@ class WaveEngine:
         # ESTIMATED digest volume (32 B/hex-digest x expected new URLs, where
         # expected-new = claims x the previous wave's observed fan-out with a
         # 1.5x safety factor; first wave assumes fan-out 50): ~1M expected
-        # new URLs = ~32 MB collected, matching the dedicated path's old
-        # gate.  At 10^8-claim scale this falls back to a count-only branch
-        # + the distributed Bloom build below.
+        # new URLs = ~32 MB collected.  At 10^8-claim scale this falls back
+        # to a count-only branch + the distributed Bloom build below.
         est_fanout = (self._new_per_claim if self._new_per_claim is not None
                       else 50.0)
         fuse_md5 = (self._bloom is not None
@@ -484,9 +478,8 @@ class WaveEngine:
         # (status < in-flight, crawler_count+1 under the retry cap); for new
         # rows it's host-not-null (they enter pending with count 0).  With
         # these two counters the wave knows the exact post-commit pending
-        # count, so run() can stop WITHOUT a probe wave — the old final
-        # wave paid a full dequeue job on both legs just to observe
-        # pending == 0, pure per-run fixed cost.
+        # count, so drain() can stop without a probe wave (a full dequeue
+        # job whose only output is pending == 0).
         claim_still_eligible = (
             (F.col("status") < FR.STATUS_IN_FLIGHT)
             & (F.col("crawler_count") + 1 < F.lit(self.max_attempts))
@@ -560,13 +553,11 @@ class WaveEngine:
 
         t0 = _t("budgets", t0)
         # frontier commit = one O(wave) merge-on-read delta: the claimed
-        # rows with their post-parse status (crawler_count+1, the MERGE
-        # semantics of FR.merge_status expressed as upsert rows) plus the
-        # newly discovered pending rows.  The old copy-on-write path
-        # rewrote the whole frontier every wave — O(frontier) write and an
-        # O(frontier) shuffle join, the dominant per-wave fixed cost once
-        # the parse stage is fast.  The delta is bounded by the politeness
-        # budgets, so at 10^10-frontier scale this write stays wave-sized.
+        # rows as upserts with their post-parse status and crawler_count+1,
+        # plus the newly discovered pending rows.  The delta is bounded by
+        # the politeness budgets, so at 10^10-frontier scale this write
+        # stays wave-sized, where rewriting the frontier would be an
+        # O(frontier) write and shuffle join per wave.
         # the parse output carries every frontier column (crawler_count is a
         # pass-through of the claim), so the status-merge upsert rows are a
         # pure SELECT off the persisted parse cache — no claimed⋈parsed
@@ -625,16 +616,6 @@ class WaveEngine:
             missing.unpersist()
         return stats
 
-    def warm_pages(self) -> None:
-        """Materialize the pages cache ahead of run() (bench methodology:
-        the one-time input-cache build is environment setup — it exists at
-        neither steady state nor Iceberg scale, where the scan prunes to
-        claimed buckets instead of being cached).  run() reuses the same
-        cache entry via plan canonicalization."""
-        if self.cache_pages:
-            p = self.pages().select("url", "html").persist()
-            p.count()
-
     def run(self, resume: bool = True) -> list[dict]:
         """Crawl from the data dir's seed list (or resume the work dir's
         state) until the frontier drains or ``max_waves``."""
@@ -662,12 +643,9 @@ class WaveEngine:
                     "(keep latest warc_ts) before crawling")
         # bytes-bounded Arrow batches for the parse stage (row cap derived
         # from the parquet footers' per-column byte stats — driver-side,
-        # no Spark job; the sampling job remains the fallback for
-        # non-parquet sources)
-        rows_per_batch = PS.tune_arrow_batch_from_footer(
+        # no Spark job)
+        rows_per_batch = PS.tune_arrow_batch(
             self.spark, os.path.join(self.data_dir, "pages.parquet"))
-        if rows_per_batch is None:
-            rows_per_batch = PS.tune_arrow_batch(self.spark, pages)
         self._avg_page_bytes = max(1024, (16 * 2**20) // rows_per_batch)
         if self.cache_pages:
             pages = pages.persist()

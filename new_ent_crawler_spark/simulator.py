@@ -14,8 +14,7 @@ from __future__ import annotations
 
 from .oracle import extract as X
 from .oracle import urlspec as U
-from .operators.frontier import (STATUS_ERROR, STATUS_FOUND, STATUS_NOT_FOUND,
-                                 STATUS_PENDING)
+from .oracle.urlspec import STATUS_FOUND, STATUS_PENDING
 
 
 class SimFrontierEntry:
@@ -103,35 +102,23 @@ class Simulator:
             for e in claimed:
                 self.order_log.append((wave, e.url))
                 e.attempts += 1
-                content = self.pages.get(e.url)
-                if content is None:
-                    e.status = STATUS_ERROR
-                    continue
-                if X.BLOCK_MARKER in content or X.INVALID_LINK_MARKER in content:
-                    e.status = STATUS_ERROR
+                e.status, blocked, text, links = U.analyze(
+                    e.url, e.host, e.company, self.pages.get(e.url))
+                if blocked:
                     blocked_hosts.add(e.host)
-                    continue
-                self.extracted[e.url] = U.extract_url_text(e.url, content)
-                kind, _ = U.classify(e.url)
-                e.status = STATUS_FOUND
-                if kind == "listing":
-                    r = X.parse_listing(content)
-                    if r is None:
-                        e.status = STATUS_ERROR
-                    elif r == "not_found":
-                        e.status = STATUS_NOT_FOUND
-                for rel, score in U.discover_links(e.url, content):
-                    absolute = U.canonicalize(rel, e.host)
-                    company = absolute if kind == "listing" else e.company
+                if text is not None:
+                    self.extracted[e.url] = text
+                for link in links:
+                    absolute = link["url"]
                     host = absolute.split("://", 1)[-1].split("/", 1)[0]
                     if not self._robots_allowed(host, absolute):
                         continue
                     if absolute in self.frontier:
                         self.dedup_hits += 1
                         continue
-                    ne = SimFrontierEntry(absolute, host, company, e.seed_id,
-                                          e.keyword, e.depth + 1, score,
-                                          e.priority, wave)
+                    ne = SimFrontierEntry(absolute, host, link["company"],
+                                          e.seed_id, e.keyword, e.depth + 1,
+                                          link["score"], e.priority, wave)
                     discovered.append(ne)
             # in-wave duplicate discovery: deterministic winner, matching the
             # engine's max-struct rule (operators/parse.py dedup_candidates)

@@ -185,7 +185,7 @@ class DeltaTable(SnapshotTable):
     * ``append_delta``— appends one small dir of changed/new rows tagged
       with a ``commit_version``; O(delta).  This is the per-wave frontier
       commit: a wave touches (claimed + discovered) rows, bounded by the
-      politeness budgets, so the write no longer scales with the frontier.
+      politeness budgets, so the write does not scale with the frontier.
     * ``read``        — base rows whose key has no delta row, unioned with
       the latest delta row per key.  Deltas-since-compaction stay bounded
       (compaction every K waves), so AQE turns the base-side anti-join into

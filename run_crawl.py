@@ -71,11 +71,14 @@ def main(argv=None):
                 ("main_url_record", ASM.main_url_record(assembled))):
             SnapshotTable(os.path.join(args.work, name)).overwrite(df)
         # exact-name matches upgrade seed status to 5 (worker/worker.py:240)
-        updates = ASM.exact_match_updates(assembled, eng.frontier())
-        from new_ent_crawler_spark.operators import frontier as FR
-        eng.frontier_t.overwrite(
-            FR.merge_status(eng.frontier(), updates),
-            meta={"wave": eng.last_wave(), "assembled": True})
+        # committed as one delta versioned above the last wave's (and any
+        # earlier assembly's), so last-writer-wins picks these rows
+        # deterministically
+        wave = eng.last_wave()
+        version = eng.frontier_t.meta().get("assembled", wave) + 1
+        eng.frontier_t.append_delta(
+            ASM.exact_match_updates(assembled, eng.frontier()),
+            version=version, meta={"wave": wave, "assembled": version})
         print(json.dumps({"companies": assembled.count()}))
         assembled.unpersist()
 

@@ -1,6 +1,9 @@
 """Operator-level property tests (SURVEY.md §5.4): budget bounds, skewed
 top-K equivalence, Bloom-prune invariance, dedup idempotence."""
 
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -184,17 +187,34 @@ def test_token_bucket_spend_refill(spark):
     robots = spark.createDataFrame(
         [("h0", ["/private/"], 1.0), ("h1", ["/private/"], 2.0)],
         "host string, disallow array<string>, crawl_delay double")
-    budgets = PL.init_budgets(robots, per_wave_k=4)
-    g0 = {r.host: r.grant for r in PL.wave_grants(budgets).collect()}
-    assert g0 == {"h0": 4, "h1": 4}
-    used = spark.createDataFrame([("h0",)] * 4 + [("h1",)] * 4, "host string")
-    b1 = PL.spend_and_refill(budgets, used)
-    g1 = {r.host: r.grant for r in PL.wave_grants(b1).collect()}
-    assert g1 == {"h0": 4, "h1": 2}  # h1 is a slow host (crawl_delay 2)
-    blocked = spark.createDataFrame([("h0",)], "host string")
-    b2 = PL.spend_and_refill(b1, used.limit(0), blocked)
-    g2 = {r.host: r.grant for r in PL.wave_grants(b2).collect()}
-    assert g2["h0"] == 0  # cool-down
+    budgets = PL.init_budgets(robots, per_wave_k=4).toPandas()
+
+    def grants(b):
+        g = PL.grants_pd(b)
+        return dict(zip(g["host"], g["grant"]))
+
+    assert grants(budgets) == {"h0": 4, "h1": 4}
+    b1 = PL.spend_and_refill_pd(budgets, {"h0": 4, "h1": 4})
+    assert grants(b1) == {"h0": 4, "h1": 2}  # h1 is a slow host (crawl_delay 2)
+    b2 = PL.spend_and_refill_pd(b1, {}, {"h0"})
+    assert grants(b2)["h0"] == 0  # cool-down
+
+
+def test_tune_arrow_batch_row_cap(spark, tiny_web, tmp_path):
+    """Row cap = clamped 16 MiB / mean html bytes; no html size raises."""
+    from new_ent_crawler_spark.operators import parse as PS
+    web_dir, _ = tiny_web
+    path = os.path.join(web_dir, "pages.parquet")
+    html = pq.read_table(path, columns=["html"]).column("html").to_pylist()
+    mean = sum(map(len, html)) / len(html)
+    rows = PS.tune_arrow_batch(spark, path)
+    assert rows == max(64, min(4096, 16 * 2**20 // int(mean)))
+    assert spark.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch") == str(rows)
+    no_html = str(tmp_path / "no_html.parquet")
+    pq.write_table(pq.read_table(path, columns=["url"]), no_html)
+    with pytest.raises(ValueError, match="html"):
+        PS.tune_arrow_batch(spark, no_html)
 
 
 def test_robots_filter(spark):

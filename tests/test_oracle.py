@@ -117,14 +117,76 @@ def test_oracle_assembles_companies(tiny_web):
     assert n_assembled > 0
 
 
+def _fetched_pages(web_dir):
+    """(url, host, content) of every page of a generated web."""
+    t = pq.read_table(web_dir + "/pages.parquet", columns=["url", "html"])
+    return [(r["url"], U.split_url(r["url"])[0], r["html"].decode("utf-8"))
+            for r in t.to_pylist()]
+
+
 def test_analyze_equals_pair(tiny_web):
     out, _ = tiny_web
-    t = pq.read_table(out + "/pages.parquet", columns=["url", "html"]).to_pylist()
-    for row in t[:100]:
-        content = row["html"].decode("utf-8")
-        text, links = U.analyze(row["url"], content)
-        assert text == U.extract_url_text(row["url"], content)
-        assert links == U.discover_links(row["url"], content)
+    company = "http://parent.example/company/1.html"
+    for url, host, content in _fetched_pages(out):
+        status, blocked, text, links = U.analyze(url, host, company, content)
+        assert not blocked
+        assert text == U.extract_url_text(url, content)
+        kind, _ = U.classify(url)
+        want = []
+        for rel, score in U.discover_links(url, content):
+            absolute = U.canonicalize(rel, host)
+            want.append({"url": absolute, "score": score,
+                         "company": absolute if kind == "listing"
+                         else company})
+        assert links == want
+        want_status = U.STATUS_FOUND
+        if kind == "listing":
+            r = X.parse_listing(content)
+            if r is None:
+                want_status = U.STATUS_ERROR
+            elif r == "not_found":
+                want_status = U.STATUS_NOT_FOUND
+        assert status == want_status
+
+
+@pytest.mark.parametrize("marker", [X.BLOCK_MARKER, X.INVALID_LINK_MARKER],
+                         ids=["block", "invalid_link"])
+def test_analyze_ban_page(marker):
+    page = "<html><body>" + marker + "</body></html>"
+    for url in ("http://h.example/search/1.html",
+                "http://h.example/company/c1.html",
+                "http://h.example/corp-query-entprise-info-alterInfo-c1.html"):
+        assert U.analyze(url, "h.example", None, page) == (
+            U.STATUS_ERROR, True, None, [])
+    assert U.analyze("http://h.example/search/1.html", "h.example", None,
+                     None) == (U.STATUS_ERROR, False, None, [])
+
+
+def test_analyze_decodes_each_payload_once(tiny_web, monkeypatch):
+    """One page through ``analyze`` runs each payload decoder at most once
+    (the listing rule, the main page's var harvest, the JSON decode)."""
+    import collections
+    out, _ = tiny_web
+    pages = _fetched_pages(out)
+    calls = collections.Counter()
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+        return wrapper
+
+    monkeypatch.setattr(json, "loads", counted("json.loads", json.loads))
+    for name in ("parse_listing", "get_urls"):
+        monkeypatch.setattr(X, name, counted(name, getattr(X, name)))
+    seen = collections.Counter()
+    for url, host, content in pages:
+        calls.clear()
+        U.analyze(url, host, None, content)
+        assert max(calls.values(), default=0) <= 1, (url, dict(calls))
+        seen.update(calls)
+    # every decoder was exercised
+    assert set(seen) == {"json.loads", "parse_listing", "get_urls"}
 
 
 def test_padded_web_goldens(tmp_path):

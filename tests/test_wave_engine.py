@@ -3,13 +3,18 @@ simulator — seen-set, crawl-order, status, and byte-identity gates
 (SURVEY.md §5.2, BASELINE.json metric)."""
 
 import json
+import os
+import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from new_ent_crawler_spark.operators import assemble as ASM
+from new_ent_crawler_spark.oracle import extract as X
 from new_ent_crawler_spark.oracle import sink as SK
+from new_ent_crawler_spark.oracle import urlspec as U
 from new_ent_crawler_spark.plans.wave import WaveEngine
 from new_ent_crawler_spark.simulator import Simulator
 from new_ent_crawler_spark.synth import webgen
@@ -144,6 +149,49 @@ def test_resume_from_checkpoint(spark, tiny_web, tmp_path_factory):
 
     assert resumed.seen_urls() == full.seen_urls()
     assert resumed.crawl_order() == full.crawl_order()
+
+
+def test_ban_page_cools_host_down(spark, tiny_web, tmp_path):
+    """A section page that serves the ban marker: the engine and the
+    simulator agree on order, seen set and statuses, the page yields no
+    text, and its host claims nothing in the wave after each ban."""
+    src, _ = tiny_web
+    web_dir = str(tmp_path / "web")
+    shutil.copytree(src, web_dir)
+    pages_p = os.path.join(web_dir, "pages.parquet")
+    pages = pq.read_table(pages_p)
+    urls = pages.column("url").to_pylist()
+    banned = next(u for u in sorted(urls)
+                  if U.classify(u)[0] == "section" and "?" not in u)
+    ban_html = ("<html>" + X.BLOCK_MARKER + "</html>").encode("utf-8")
+    html = [ban_html if u == banned else h
+            for u, h in zip(urls, pages.column("html").to_pylist())]
+    i = pages.schema.get_field_index("html")
+    pq.write_table(pages.set_column(i, pages.schema.field(i),
+                                    pa.array(html, pa.binary())), pages_p)
+
+    eng = WaveEngine(spark, web_dir, str(tmp_path / "work"), per_host_k=8,
+                     max_waves=30, expected_total_urls=10_000)
+    eng.run()
+    sim = _simulator_for(web_dir, per_host_k=8, max_waves=30)
+    order = eng.crawl_order()
+    assert order == sim.crawl_order()
+    assert eng.seen_urls() == sim.seen_urls()
+    got = {r.url: r.status
+           for r in eng.frontier().select("url", "status").collect()}
+    assert got == sim.statuses()
+    assert got[banned] == U.STATUS_ERROR
+    texts = [r.text for r in
+             eng.extracted().filter(F.col("url") == banned).collect()]
+    assert texts and all(t is None for t in texts)
+    host = U.split_url(banned)[0]
+    ban_waves = [w for w, u in order if u == banned]
+    for w in ban_waves:
+        assert not [u for w2, u in order
+                    if w2 == w + 1 and U.split_url(u)[0] == host]
+    # the host was cooled down, not drained: it claims again afterwards
+    assert any(w > ban_waves[0] + 1 and U.split_url(u)[0] == host
+               for w, u in order)
 
 
 def test_add_seeds_joins_frontier_and_bloom(spark, tiny_web, tmp_path):
