@@ -406,8 +406,7 @@ def run_crawl(cpus: int, web_dir: str, work_root: str, tag: str) -> dict:
     wwork = os.path.join(work_root, f"warmwork_{tag}")
     shutil.rmtree(wwork, ignore_errors=True)
     WaveEngine(spark, _warmup_web(work_root), wwork, per_host_k=100,
-               max_waves=40, cache_pages=False,
-               expected_total_urls=10_000).run(resume=False)
+               max_waves=40, cache_pages=False).run(resume=False)
     shutil.rmtree(wwork, ignore_errors=True)
 
     work = os.path.join(work_root, f"work_{tag}")
@@ -419,8 +418,7 @@ def run_crawl(cpus: int, web_dir: str, work_root: str, tag: str) -> dict:
     # cache variant saturates single-box memory bandwidth and understates
     # multi-node scaling (see BENCH/BASELINE.md).
     eng = WaveEngine(spark, web_dir, work, per_host_k=per_host_k,
-                     max_waves=40, cache_pages=False,
-                     expected_total_urls=2_000_000, salt_buckets=16)
+                     max_waves=40, cache_pages=False, salt_buckets=16)
     ticks0 = _cpu_ticks()
     t0 = time.perf_counter()
     stats = eng.run(resume=False)

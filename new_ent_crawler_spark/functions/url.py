@@ -4,7 +4,7 @@ The reference keys its seen set on raw URL strings (its registry URL grammar
 is fully deterministic, spiders/worker.py builds every URL itself, so raw
 equality suffices there).  An open web crawl meets the same page under many
 spellings — uppercase scheme/host, explicit default port, shuffled query
-parameters, fragments — and keys its Bloom/cuckoo seen set and frontier MERGE
+parameters, fragments — and keys its seen-set anti-join and frontier MERGE
 on the canonical form instead.  This module is that canonicalizer, built
 ONLY from portable JVM-side primitives (regexp, lower, split, array_sort,
 concat_ws) so it stays inside whole-stage codegen AND is exactly

@@ -13,6 +13,10 @@ Bloom is a *pruning pre-filter only* —
 At 10^10 URLs the Bloom is built from per-partition counts and merged with
 ``treeAggregate(depth=...)`` so raw URL sets never hit the driver; only the
 bit array does (≈1.2 GB at 10^10 keys / 1% fpp — broadcast-able).
+
+The crawl engine (plans/wave.py) passes no filter: its seen set is the
+exact anti-join alone.  The Bloom and cuckoo filters back the oracled
+``bloom_prune_new_keys`` and ``cuckoo_prune_new_keys`` queries.
 """
 
 from __future__ import annotations
@@ -111,7 +115,7 @@ class CuckooFilter:
     filters of the same shape MERGEABLE by re-inserting raw pairs (the
     treeReduce partition-build pattern, same as the Bloom).
 
-    Membership checks (the per-wave hot path) are fully numpy-vectorized
+    Membership checks are fully numpy-vectorized
     (``might_contain_many_hex``), and bulk inserts place all free-slot
     fingerprints in two vectorized scatters (primary then alternate
     bucket) with only the both-buckets-full residue walking the
@@ -329,27 +333,19 @@ def filter_new_urls(candidates: DataFrame, seen_urls: DataFrame,
     a Bloom, only the possibly-seen slice pays the anti-join shuffle; the
     definitely-new slice flows straight through.
 
-    ``seen_count`` (if the caller already knows it — the wave engine gets
-    the frontier size for free from its head job) gates a broadcast hint on
+    ``seen_count`` (if the caller already knows it — the wave engine reads
+    the frontier size from its table metadata) gates a broadcast hint on
     the SEEN side of the exact anti-join: below ``broadcast_below`` rows
     (~a few hundred MB of url strings at the cap) the anti-join becomes a
     map-side broadcast probe and the per-wave shuffle of the whole seen set
     disappears.  Above it — the 10^10-frontier regime — the hint is
-    withheld and the join shuffles as before (where an Iceberg seen table
-    bucketed by url would prune instead).  Under the broadcast the Bloom
-    pre-filter is skipped entirely (a map-side hash probe is cheaper than
-    the Bloom's Python round trip).  Exactness is never traded: the Bloom
-    only ever routes rows, the broadcast only changes the join strategy.
+    withheld and the join shuffles (where an Iceberg seen table bucketed by
+    url would prune instead).  Under the broadcast the Bloom pre-filter is
+    skipped entirely (a map-side hash probe is cheaper than the Bloom's
+    Python round trip).  Exactness is never traded: the Bloom only ever
+    routes rows, the broadcast only changes the join strategy.
     """
     if seen_count is not None and seen_count < broadcast_below:
-        # When the exact anti-join is already a map-side broadcast probe,
-        # the Bloom pre-filter is strictly redundant work: every candidate
-        # pays a Python/Arrow round trip to decide whether to skip a JVM
-        # hash probe that costs less than the round trip.  Skip the tagging
-        # and anti-join everything — the result is identical (the Bloom
-        # only ever routed rows).  At 10^10-frontier scale seen_count blows
-        # the gate, the hint is withheld, and the Bloom prune pays for
-        # itself by shrinking the shuffled slice — that path is unchanged.
         return candidates.join(F.broadcast(seen_urls.select("url")),
                                "url", "left_anti")
     if bloom is None:

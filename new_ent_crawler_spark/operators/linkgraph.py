@@ -75,7 +75,7 @@ def degree_stats(edges: DataFrame) -> DataFrame:
 
 
 def pagerank(edges: DataFrame, damping: float = 0.85,
-             iterations: int = 5, checkpoint: bool = True) -> DataFrame:
+             iterations: int = 5) -> DataFrame:
     """Damped PageRank with uniform dangling-mass redistribution.
 
     rank_{k+1}(v) = (1-d)/N + d * (Σ_{(u,v)∈E} rank_k(u)/outdeg(u)
@@ -84,10 +84,7 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     where ``dangling_k`` is the total rank held by nodes with no out-edges.
     Returns ``(node, rank)`` summing to 1.0 (mass-conserving) after any
     number of iterations.  See the module docstring for the scale design;
-    the only driver-side scalar is N (one count job before the loop).
-    ``checkpoint=False`` skips the per-iteration lineage truncation so a
-    single iteration's physical plan can be inspected (docs_gen/
-    gen_plans.py); production callers keep the default."""
+    the only driver-side scalar is N (one count job before the loop)."""
     nodes = (edges.select(F.col("src").alias("node"))
              .unionByName(edges.select(F.col("dst").alias("node")))
              .distinct()
@@ -122,10 +119,9 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
                           * (F.coalesce(F.col("m"), F.lit(0.0))
                              + F.col("dm") / F.lit(float(n))))
                          .alias("rank")))
-        if checkpoint:
-            # truncate lineage: without this the logical plan doubles per
-            # iteration and analysis time dominates by iter ~15
-            ranks = ranks.localCheckpoint(eager=True)
+        # truncate lineage: without this the logical plan doubles per
+        # iteration and analysis time dominates by iter ~15
+        ranks = ranks.localCheckpoint(eager=True)
     nodes.unpersist()
     weighted.unpersist()
     return ranks

@@ -7,7 +7,7 @@ dispatcher/dispatcher.py:35), executed as a DAG of DataFrame jobs:
       ──inner broadcast-hash join against `pages` (the simulated web) +
         left_anti for fetch misses──▶ fetched (html nullable)
       ──mapInPandas Arrow parse (extract text, classify, discover links)──▶
-      ──explode links ▸ robots filter ▸ Bloom prune ▸ exact left_anti──▶ new
+      ──explode links ▸ robots filter ▸ exact left_anti vs frontier──▶ new
       ──MERGE statuses + append new rows ▸ snapshot commit──▶ next wave
 
 Scale notes (the design criteria this engine is judged on):
@@ -19,9 +19,10 @@ Scale notes (the design criteria this engine is judged on):
 * Dequeue is the only frontier-wide shuffle and it is salted two-phase
   top-K (operators/frontier.py) — registry-domain skew spreads over
   ``salt_buckets`` tasks.
-* The seen-set check anti-joins only the Bloom-positive slice
-  (operators/dedup.py); the Bloom itself is built once via treeAggregate and
-  merged incrementally with each wave's appended URLs — never rebuilt.
+* The seen-set check is one exact left_anti join of the wave's candidates
+  against the frontier's url set (operators/dedup.py::filter_new_urls): a
+  broadcast probe while the frontier holds fewer than
+  ``SEEN_BROADCAST_BELOW`` rows, a shuffled anti-join above that.
 * Every wave ends in an atomic snapshot commit of the frontier (the last
   write); crash mid-wave resumes from the previous frontier snapshot and
   rolls the append-only tables back to it (idempotent replay).
@@ -43,6 +44,9 @@ from ..operators import politeness as PL
 from ..sources.snapshot import DeltaTable, SnapshotTable
 
 ORDER_COLS = ["priority", "depth", "page_type_score", "enqueue_wave", "url"]
+# frontier rows below which the seen-set anti-join broadcasts the frontier's
+# url set (see DD.filter_new_urls); read per wave, so a test can patch it
+SEEN_BROADCAST_BELOW = 4_000_000
 
 
 def _control_schemas():
@@ -65,10 +69,12 @@ class WaveEngine:
     def __init__(self, spark: SparkSession, data_dir: str, work_dir: str,
                  per_host_k: int = 4, max_waves: int = 64,
                  salt_buckets: int = 8, max_attempts: int = 3,
-                 expected_total_urls: int = 1_000_000,
+                 expected_total_urls: int | None = None,
                  cache_pages: bool = True, compact_every: int = 8,
-                 seen_broadcast_below: int = 4_000_000,
                  verify_unique_urls: bool = False):
+        """``expected_total_urls`` is accepted and ignored, because
+        perfbench/crawl.py still passes it: the seen set is the frontier
+        table itself, so there is no filter to size."""
         self.spark = spark
         self.data_dir = data_dir
         self.work_dir = work_dir
@@ -76,7 +82,6 @@ class WaveEngine:
         self.max_waves = max_waves
         self.salt_buckets = salt_buckets
         self.max_attempts = max_attempts
-        self.expected_total_urls = expected_total_urls
         # caching the (url, html) projection avoids a parquet scan per wave;
         # at 100 TB you would NOT cache — an Iceberg pages table bucketed by
         # url lets the per-wave broadcast probe prune to claimed buckets
@@ -90,9 +95,6 @@ class WaveEngine:
         # homogeneous files whose min/max footer stats the eligibility
         # scan prunes on (see append_delta below).
         self.compact_every = compact_every
-        # seen-side broadcast gate for the exact anti-join (see
-        # DD.filter_new_urls); probes compare broadcast vs shuffle here
-        self.seen_broadcast_below = seen_broadcast_below
         # opt-in load-time check of the pages unique-url invariant (see
         # pages() docstring); off by default — at 10^10 rows it is a real
         # (if column-pruned) aggregate job, and deduped-at-ingest is the
@@ -104,20 +106,12 @@ class WaveEngine:
         self.budgets_t = SnapshotTable(os.path.join(work_dir, "budgets"))
         self.extracted_t = SnapshotTable(os.path.join(work_dir, "extracted"))
         self.lineage_t = SnapshotTable(os.path.join(work_dir, "lineage"))
-        self._bloom: DD.BloomFilter | None = None
         # mean page size (set by drain()'s Arrow batch tuning; sizes the
         # pruned-scan coalesce)
         self._avg_page_bytes = 24 * 1024
         # pages-scan split count, planned once on the first wave (a session
         # constant: splits are sized before the pruning filter)
         self._scan_parts: int | None = None
-        # observed new-URLs-per-claim ratio from the previous wave; gates the
-        # fused md5 collect on an ESTIMATE of collected digest volume (the
-        # digests are O(n_new) = claims x out-link fan-out, so gating on
-        # n_claimed alone could pull hundreds of MB through collect() on a
-        # high-fan-out wave before n_new is known).  None until the first
-        # wave reports; the gate then uses a conservative default fan-out.
-        self._new_per_claim: float | None = None
         # politeness state lives driver-side between waves (budgets are
         # broadcast-bound, so they fit by construction); the budgets table
         # is still committed every wave for resume
@@ -208,43 +202,20 @@ class WaveEngine:
     def last_wave(self) -> int:
         return self.frontier_t.meta().get("wave", 0)
 
-    def _ensure_bloom(self, frontier: DataFrame):
-        if self._bloom is None:
-            self._bloom = DD.build_bloom(frontier.select("url"),
-                                         expected=self.expected_total_urls)
-
-    def _bloom_add(self, urls: DataFrame, n: int):
-        """Add ``n`` URLs to the Bloom: up to 10^6 through one md5 collect,
-        beyond that a distributed treeAggregate build merged in (a full
-        sized Bloom per partition plus a merge, which only wins when the
-        collect itself would strain the driver)."""
-        if n <= 1_000_000:
-            self._bloom.add_many_hex(
-                [r[0] for r in urls.select(F.md5("url")).collect()])
-        else:
-            self._bloom = self._bloom.merge(DD.build_bloom(
-                urls.select("url"), expected=self.expected_total_urls))
-
     def add_seeds(self, seeds: DataFrame) -> None:
         """Add a seed batch (the ``seeds.parquet`` schema) to the frontier.
 
         An engine with no state takes the batch as its wave-0 frontier.
         Otherwise the batch's URLs that the frontier does not hold yet are
         committed as one delta at the current wave, so the next wave can
-        claim them, and go into the Bloom if it is built: a seed missing
-        from the Bloom would let a later link to it pass as new."""
+        claim them."""
         if not self.frontier_t.exists():
             self._init_state(seeds)
             return
         wave = self.last_wave()
         new = FR.init_frontier(seeds).join(self.frontier().select("url"),
                                            "url", "left_anti")
-        snap = self.frontier_t.append_delta(new, version=wave,
-                                            meta={"wave": wave})
-        n_new = self.frontier_t.dir_rows(snap["dirs"][-1])
-        if self._bloom is not None and n_new > 0:
-            self._bloom_add(self.spark.read.parquet(
-                os.path.join(self.frontier_t.path, snap["dirs"][-1])), n_new)
+        self.frontier_t.append_delta(new, version=wave, meta={"wave": wave})
 
     # -- one micro-batch -----------------------------------------------------
 
@@ -267,8 +238,6 @@ class WaveEngine:
         frontier = self.frontier_t.read(spark).persist()
         budgets_pdf = self._budgets()
         t0 = _t("rs_plan", t0)   # manifest read + merge-on-read DAG build
-        self._ensure_bloom(frontier)
-        t0 = _t("read_state", t0)  # first-wave seen-filter build job
 
         grants = spark.createDataFrame(PL.grants_pd(budgets_pdf),
                                        "host string, grant int")
@@ -450,9 +419,9 @@ class WaveEngine:
         # pending slice, so approximate the frontier size from the table's
         # row-count metadata kept by the delta log (cheap, driver-side)
         new_urls = DD.filter_new_urls(candidates, frontier.select("url"),
-                                      self._bloom,
+                                      None,
                                       seen_count=self.frontier_t.approx_rows(),
-                                      broadcast_below=self.seen_broadcast_below
+                                      broadcast_below=SEEN_BROADCAST_BELOW
                                       ).persist()
         t0 = _t("cd_plan", t0)   # driver-side candidates/new-urls DAG build
         # ONE control-collect job materializes both caches and yields the
@@ -461,18 +430,6 @@ class WaveEngine:
         # scaling once the parse stage is fast (Amdahl), so every small
         # action is fused into this single generic-schema collect.
         #
-        # When the wave is small enough the new-URL md5 digests ride back on
-        # the SAME job as per-partition concatenated hex — the Bloom update
-        # then needs no separate collect job at all.  The gate bounds the
-        # ESTIMATED digest volume (32 B/hex-digest x expected new URLs, where
-        # expected-new = claims x the previous wave's observed fan-out with a
-        # 1.5x safety factor; first wave assumes fan-out 50): ~1M expected
-        # new URLs = ~32 MB collected.  At 10^8-claim scale this falls back
-        # to a count-only branch + the distributed Bloom build below.
-        est_fanout = (self._new_per_claim if self._new_per_claim is not None
-                      else 50.0)
-        fuse_md5 = (self._bloom is not None
-                    and n_claimed * est_fanout * 1.5 <= 1_000_000)
         # "c" column = rows that will still be claim-eligible AFTER this
         # wave's delta commits: for claims that's the post-update predicate
         # (status < in-flight, crawler_count+1 under the retry cap); for new
@@ -485,15 +442,6 @@ class WaveEngine:
             & (F.col("crawler_count") + 1 < F.lit(self.max_attempts))
             & F.col("host").isNotNull())
         new_branch = (
-            new_urls.select(F.md5("url").alias("h"),
-                            F.col("host").isNotNull().alias("ok"))
-            .groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("a"),
-                 F.sum(F.col("ok").cast("long")).alias("c"),
-                 F.concat_ws("", F.collect_list("h")).alias("s"))
-            .select(F.lit("new").alias("kind"), "pid", "a",
-                    F.lit(0).cast("long").alias("b"), "c", "s")
-            if fuse_md5 else
             new_urls.agg(
                 F.count("*").alias("a"),
                 F.sum(F.col("host").isNotNull().cast("long")).alias("c"))
@@ -522,13 +470,6 @@ class WaveEngine:
         n_new = sum(r.a for r in ctrl if r.kind == "new")
         n_still_eligible = sum(r.c or 0 for r in ctrl if r.kind == "parse")
         n_new_eligible = sum(r.c or 0 for r in ctrl if r.kind == "new")
-        # feed the observed fan-out back into the next wave's fuse gate
-        if n_claimed > 0:
-            self._new_per_claim = n_new / n_claimed
-        # add_many_hex concatenates its input anyway, so the per-partition
-        # blobs go in as-is — no per-digest splitting
-        new_md5_blobs = ([r.s for r in ctrl if r.kind == "new" and r.s]
-                         if fuse_md5 else None)
         blocked = set()
         for r in ctrl:
             if r.kind == "parse" and r.s:
@@ -589,18 +530,7 @@ class WaveEngine:
             self.frontier_t.compact(self.spark, version=wave,
                                     n_files=max(16, cores))
 
-        t0 = _t("frontier_merge", t0)
-        if self._bloom is not None and n_new > 0:
-            # incremental seen-set update: a wave's new URLs are bounded by
-            # the politeness budgets.  Small waves already brought their md5
-            # digests back on the fused control job (no extra Spark job at
-            # all — one vectorized numpy pass adds them)
-            if new_md5_blobs is not None:
-                self._bloom.add_many_hex(new_md5_blobs)
-            else:
-                self._bloom_add(new_urls, n_new)
-
-        t0 = _t("bloom_merge", t0)
+        _t("frontier_merge", t0)
         stats.update({"candidates": n_candidates, "new": n_new,
                       # exact post-commit pending count: unclaimed eligible
                       # rows + claims that stayed retryable + eligible new

@@ -1,7 +1,7 @@
 """Custom stateful streaming operators via ``applyInPandasWithState``.
 
-The batch engine's URL-seen set is a Bloom prune + exact left_anti join per
-wave (operators/dedup.py).  In continuous operation the same semantics are a
+The batch engine's URL-seen set is an exact left_anti join per wave against
+its frontier (operators/dedup.py::filter_new_urls).  In continuous operation the same semantics are a
 *stateful streaming* operator: per-host state holding the set of url hashes
 seen so far; each micro-batch emits only first-occurrence rows and folds the
 rest into state.  This mirrors the reference's REPLACE-INTO-md5 dedup

@@ -4,8 +4,8 @@ Seed files land in a directory; a file-source stream picks them up, and
 ``foreachBatch`` hands each micro-batch to one ``WaveEngine``: the batch's
 seeds join the frontier, then the engine runs waves until the frontier
 drains.  The stream therefore crawls through the same ``run_wave`` as the
-batch ``run()`` — robots filter, politeness budgets, retry cap and Bloom
-seen filter included — and the reference's dispatcher poll loop
+batch ``run()`` — robots filter, politeness budgets, retry cap and the
+exact seen-set anti-join included — and the reference's dispatcher poll loop
 (dispatcher/dispatcher.py:35) becomes the stream trigger interval.
 
 Also includes a watermarked windowed aggregation over crawl lineage — the

@@ -33,7 +33,6 @@ def main(argv=None):
     ap.add_argument("--per-host-k", type=int, default=8)
     ap.add_argument("--max-waves", type=int, default=64)
     ap.add_argument("--salt-buckets", type=int, default=16)
-    ap.add_argument("--expected-urls", type=int, default=1_000_000)
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--assemble", action="store_true",
                     help="write sink tables after the crawl")
@@ -49,8 +48,7 @@ def main(argv=None):
     from new_ent_crawler_spark.plans.wave import WaveEngine
     eng = WaveEngine(spark, args.data, args.work,
                      per_host_k=args.per_host_k, max_waves=args.max_waves,
-                     salt_buckets=args.salt_buckets,
-                     expected_total_urls=args.expected_urls)
+                     salt_buckets=args.salt_buckets)
     t0 = time.perf_counter()
     stats = eng.run(resume=not args.no_resume)
     elapsed = time.perf_counter() - t0

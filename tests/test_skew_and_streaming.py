@@ -21,7 +21,7 @@ def test_skewed_crawl_matches_simulator(spark, skew_web, tmp_path_factory):
     web_dir, stats = skew_web
     work = str(tmp_path_factory.mktemp("skewwork"))
     eng = WaveEngine(spark, web_dir, work, per_host_k=16, max_waves=40,
-                     expected_total_urls=50_000, salt_buckets=8)
+                     salt_buckets=8)
     eng.run()
 
     pages = webgen.load_fetch(web_dir)
@@ -57,7 +57,7 @@ def test_stream_crawl_matches_batch_crawl(spark, tiny_web, tmp_path):
         pa.array(rules, pa.list_(pa.string()))), robots_p)
 
     batch = WaveEngine(spark, web_dir, str(tmp_path / "batch"),
-                       per_host_k=8, max_waves=30, expected_total_urls=10_000)
+                       per_host_k=8, max_waves=30)
     batch.run()
 
     seed_dir = str(tmp_path / "seeds_in")
@@ -65,7 +65,7 @@ def test_stream_crawl_matches_batch_crawl(spark, tiny_web, tmp_path):
     shutil.copy(os.path.join(web_dir, "seeds.parquet"),
                 os.path.join(seed_dir, "batch0.parquet"))
     eng = WaveEngine(spark, web_dir, str(tmp_path / "stream"),
-                     per_host_k=8, max_waves=30, expected_total_urls=10_000)
+                     per_host_k=8, max_waves=30)
     q = ST.crawl_stream(eng, seed_dir, str(tmp_path / "ckpt"),
                         trigger_seconds=1).start()
     try:

@@ -20,7 +20,7 @@ def crawled(spark, tmp_path_factory):
     work = str(tmp_path_factory.mktemp("prune_work"))
     webgen.generate(web, n_hosts=4, companies_per_host=4, seed=23)
     eng = WaveEngine(spark, web, work, per_host_k=50, max_waves=20,
-                     expected_total_urls=10_000, compact_every=2)
+                     compact_every=2)
     eng.run(resume=False)
     return eng
 

@@ -4,6 +4,7 @@ simulator — seen-set, crawl-order, status, and byte-identity gates
 
 import json
 import os
+import re
 import shutil
 
 import pyarrow as pa
@@ -15,6 +16,7 @@ from new_ent_crawler_spark.operators import assemble as ASM
 from new_ent_crawler_spark.oracle import extract as X
 from new_ent_crawler_spark.oracle import sink as SK
 from new_ent_crawler_spark.oracle import urlspec as U
+from new_ent_crawler_spark.plans import wave as W
 from new_ent_crawler_spark.plans.wave import WaveEngine
 from new_ent_crawler_spark.simulator import Simulator
 from new_ent_crawler_spark.synth import webgen
@@ -31,15 +33,17 @@ def _simulator_for(web_dir, **kw):
     return sim
 
 
-@pytest.fixture(scope="module")
-def crawl(spark, tiny_web, tmp_path_factory):
-    web_dir, _ = tiny_web
+def _crawl(spark, web_dir, tmp_path_factory):
     work = str(tmp_path_factory.mktemp("work"))
-    eng = WaveEngine(spark, web_dir, work, per_host_k=8, max_waves=30,
-                     expected_total_urls=10_000)
+    eng = WaveEngine(spark, web_dir, work, per_host_k=8, max_waves=30)
     stats = eng.run()
     sim = _simulator_for(web_dir, per_host_k=8, max_waves=30)
     return eng, sim, stats
+
+
+@pytest.fixture(scope="module")
+def crawl(spark, tiny_web, tmp_path_factory):
+    return _crawl(spark, tiny_web[0], tmp_path_factory)
 
 
 def test_crawl_terminates(crawl):
@@ -136,15 +140,12 @@ def test_resume_from_checkpoint(spark, tiny_web, tmp_path_factory):
     web_dir, _ = tiny_web
     w_full = str(tmp_path_factory.mktemp("full"))
     w_part = str(tmp_path_factory.mktemp("part"))
-    full = WaveEngine(spark, web_dir, w_full, per_host_k=8, max_waves=30,
-                      expected_total_urls=10_000)
+    full = WaveEngine(spark, web_dir, w_full, per_host_k=8, max_waves=30)
     full.run()
 
-    part = WaveEngine(spark, web_dir, w_part, per_host_k=8, max_waves=2,
-                      expected_total_urls=10_000)
+    part = WaveEngine(spark, web_dir, w_part, per_host_k=8, max_waves=2)
     part.run()
-    resumed = WaveEngine(spark, web_dir, w_part, per_host_k=8, max_waves=30,
-                         expected_total_urls=10_000)
+    resumed = WaveEngine(spark, web_dir, w_part, per_host_k=8, max_waves=30)
     resumed.run(resume=True)
 
     assert resumed.seen_urls() == full.seen_urls()
@@ -171,7 +172,7 @@ def test_ban_page_cools_host_down(spark, tiny_web, tmp_path):
                                     pa.array(html, pa.binary())), pages_p)
 
     eng = WaveEngine(spark, web_dir, str(tmp_path / "work"), per_host_k=8,
-                     max_waves=30, expected_total_urls=10_000)
+                     max_waves=30)
     eng.run()
     sim = _simulator_for(web_dir, per_host_k=8, max_waves=30)
     order = eng.crawl_order()
@@ -194,25 +195,31 @@ def test_ban_page_cools_host_down(spark, tiny_web, tmp_path):
                for w, u in order)
 
 
-def test_add_seeds_joins_frontier_and_bloom(spark, tiny_web, tmp_path):
+def test_add_seeds_joins_frontier(spark, tiny_web, tmp_path):
     """Seeds added to a running crawl: the URLs the frontier lacks enter as
-    one pending delta at the current wave and go into the Bloom — a seed
-    missing from it would let a later link to the seed pass as new."""
+    one pending delta at the current wave, and the waves after it crawl
+    each late seed once without adding it again."""
     web_dir, _ = tiny_web
     seeds = spark.read.parquet(web_dir + "/seeds.parquet")
     eng = WaveEngine(spark, web_dir, str(tmp_path), per_host_k=8,
-                     max_waves=1, expected_total_urls=10_000)
+                     max_waves=1)
     eng.add_seeds(seeds.filter("seed_id % 2 = 0"))
     eng.drain()
-    assert eng.last_wave() == 1 and eng._bloom is not None
+    assert eng.last_wave() == 1
     eng.add_seeds(seeds)  # half of these are in the frontier already
     late = [r.seed_url for r in seeds.filter("seed_id % 2 = 1").collect()]
     snap = eng.frontier_t.current_snapshot()
     assert snap["meta"]["wave"] == 1
     assert eng.frontier_t.dir_rows(snap["dirs"][-1]) == len(late)
-    assert all(eng._bloom.might_contain(u) for u in late)
     rows = {r.url: (r.status, r.depth) for r in eng.frontier().collect()}
     assert all(rows[u] == (0, 0) for u in late)
+    eng.max_waves = 3
+    eng.drain()
+    n_rows = dict(eng.frontier().filter(F.col("url").isin(late))
+                  .groupBy("url").count().collect())
+    assert n_rows == {u: 1 for u in late}
+    order = [u for _, u in eng.crawl_order()]
+    assert all(order.count(u) == 1 for u in late)
 
 
 def test_delta_frontier_compaction_equivalence(spark, tiny_web,
@@ -230,10 +237,10 @@ def test_delta_frontier_compaction_equivalence(spark, tiny_web,
     w_a = str(tmp_path_factory.mktemp("compact2"))
     w_b = str(tmp_path_factory.mktemp("compact100"))
     a = WaveEngine(spark, web_dir, w_a, per_host_k=8, max_waves=30,
-                   expected_total_urls=10_000, compact_every=2)
+                   compact_every=2)
     a.run()
     b = WaveEngine(spark, web_dir, w_b, per_host_k=8, max_waves=30,
-                   expected_total_urls=10_000, compact_every=10_000)
+                   compact_every=10_000)
     b.run()
     assert a.seen_urls() == b.seen_urls()
     assert a.crawl_order() == b.crawl_order()
@@ -308,3 +315,67 @@ def test_run_crawl_cli_assemble(crawl, spark, tiny_web):
     got = {r.url: r.status
            for r in eng.frontier().select("url", "status").collect()}
     assert got == sim.statuses()
+
+
+@pytest.fixture(scope="module")
+def revisit_web(tiny_web, tmp_path_factory):
+    """tiny_web plus one seed at a page the crawl reaches in its last wave,
+    so that wave re-discovers a URL the frontier already holds (the links
+    of tiny_web alone never point back into the frontier)."""
+    web_dir = str(tmp_path_factory.mktemp("revisit") / "web")
+    shutil.copytree(tiny_web[0], web_dir)
+    order = _simulator_for(web_dir, per_host_k=8, max_waves=30).crawl_order()
+    url = min(u for w, u in order if w == order[-1][0])
+    seeds_p = os.path.join(web_dir, "seeds.parquet")
+    seeds = pq.read_table(seeds_p)
+    extra = dict(seeds.slice(0, 1).to_pylist()[0], seed_url=url,
+                 host=U.split_url(url)[0],
+                 seed_id=max(seeds.column("seed_id").to_pylist()) + 1)
+    pq.write_table(pa.concat_tables(
+        [seeds, pa.Table.from_pylist([extra], schema=seeds.schema)]), seeds_p)
+    return web_dir
+
+
+class TestSeenJoinArms:
+    """The engine-vs-Simulator checks on a crawl that re-discovers a URL it
+    holds, on both arms of the seen-set anti-join: the broadcast a small
+    frontier gets, and the shuffled join past ``SEEN_BROADCAST_BELOW``."""
+
+    @pytest.fixture(scope="class", params=["broadcast", "shuffled"])
+    def crawl(self, request, spark, revisit_web, tmp_path_factory):
+        plans = []
+        filter_new_urls = W.DD.filter_new_urls
+
+        def spy(*args, **kw):
+            df = filter_new_urls(*args, **kw)
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            return df
+
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(W.DD, "filter_new_urls", spy)
+            if request.param == "shuffled":
+                mp.setattr(W, "SEEN_BROADCAST_BELOW", 0)
+                # else Spark broadcasts the small test frontier by size
+                spark.conf.set(key, "-1")
+            try:
+                out = _crawl(spark, revisit_web, tmp_path_factory)
+            finally:
+                spark.conf.set(key, old)
+        join = {"broadcast": "BroadcastHashJoin",
+                "shuffled": "SortMergeJoin"}[request.param]
+        assert plans and all(
+            re.search(join + r" \[url#\d+], \[url#\d+], LeftAnti", p)
+            for p in plans)
+        assert out[1].dedup_hits > 0
+        return out
+
+    test_crawl_terminates = staticmethod(test_crawl_terminates)
+    test_seen_set_equality = staticmethod(test_seen_set_equality)
+    test_crawl_order_equality = staticmethod(test_crawl_order_equality)
+    test_statuses_equal = staticmethod(test_statuses_equal)
+    test_byte_identical_extracted_text = staticmethod(
+        test_byte_identical_extracted_text)
+    test_lineage_counts = staticmethod(test_lineage_counts)
+    test_pending_after_exact = staticmethod(test_pending_after_exact)
