@@ -218,7 +218,7 @@ def _shm_free() -> int:
 
 def _corpus_root(corpus_bytes: int) -> str:
     """tmpfs when corpus + work headroom honestly fits: the crawl legs
-    re-scan the full web every wave (cache_pages=False) and the shared disk
+    re-scan the web from storage every wave and the shared disk
     adds 2-3x run-to-run I/O variance that steal% never shows.  The r03
     check tested only the corpus against a flat 40 GB; this budgets the SUM
     (corpus + 2x work dirs + JVM/page-cache headroom) and falls back to
@@ -406,19 +406,14 @@ def run_crawl(cpus: int, web_dir: str, work_root: str, tag: str) -> dict:
     wwork = os.path.join(work_root, f"warmwork_{tag}")
     shutil.rmtree(wwork, ignore_errors=True)
     WaveEngine(spark, _warmup_web(work_root), wwork, per_host_k=100,
-               max_waves=40, cache_pages=False).run(resume=False)
+               max_waves=40).run(resume=False)
     shutil.rmtree(wwork, ignore_errors=True)
 
     work = os.path.join(work_root, f"work_{tag}")
     shutil.rmtree(work, ignore_errors=True)
     per_host_k = int(os.environ.get("BENCH_PER_HOST_K", "9600"))
-    # cache_pages=False is the representative config: no cluster caches a
-    # 100 TB corpus — each wave scans compressed storage with CPU-bound
-    # decode, which is what actually scales with executors.  The in-memory
-    # cache variant saturates single-box memory bandwidth and understates
-    # multi-node scaling (see BENCH/BASELINE.md).
     eng = WaveEngine(spark, web_dir, work, per_host_k=per_host_k,
-                     max_waves=40, cache_pages=False, salt_buckets=16)
+                     max_waves=40, salt_buckets=16)
     ticks0 = _cpu_ticks()
     t0 = time.perf_counter()
     stats = eng.run(resume=False)

@@ -104,9 +104,13 @@ def jaccard_pairs_from_shingle_arrays(arrs: DataFrame, threshold: float,
     ints instead of shingle strings (8-25+ bytes each) — the one shuffle
     here is the operator's dominant cost at scale.  Intersection counts
     are unchanged unless two distinct shingles of the same doc pair
-    collide in 64 bits (P ~ n_distinct^2 / 2^64 — ~1e-6 at 10^6 distinct
-    shingles, and a collision shifts one pair's count by 1); pass False
-    for the exact-string path."""
+    collide in 64 bits (P ~ n_distinct^2 / 2^65 — ~3e-8 at 10^6 distinct
+    shingles, and a collision shifts one pair's count by 1).  Corpus-wide
+    the same birthday bound applies to ALL distinct shingles N: P ~ 1 -
+    exp(-N^2 / 2^65), about 0.4 at N = 2^32 (~4.3e9), a count a 10^10-row
+    corpus can reach.  Such a collision merges two posting lists, which can
+    flip a pair at the threshold or push the merged bucket past
+    ``max_shingle_freq``.  Pass False for the exact-string path."""
     if hash_shingles:
         arrs = arrs.withColumn(
             "shs", F.transform("shs", lambda s: F.xxhash64(s)))

@@ -22,8 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..oracle import urlspec as U
-from ..oracle.urlspec import (STATUS_ERROR, STATUS_EXACT,  # noqa: F401
-                              STATUS_FOUND, STATUS_IN_FLIGHT,
+from ..oracle.urlspec import (MAX_ATTEMPTS, STATUS_ERROR,  # noqa: F401
+                              STATUS_EXACT, STATUS_FOUND, STATUS_IN_FLIGHT,
                               STATUS_NOT_FOUND, STATUS_PENDING)
 
 FRONTIER_SCHEMA = T.StructType([
@@ -109,18 +109,18 @@ def _order_cols():
             F.col("url").asc()]
 
 
-def eligibility_predicate(max_attempts: int = 3):
+def eligibility_predicate():
     """The single definition of "this row can still be claimed".  Used by
-    both ``dequeue`` and the wave engine's fused pending head-count, so the
-    two cannot disagree: a null-host row counted as pending but never
-    claimable would spin refill-only waves until max_waves."""
+    ``dequeue`` and by the wave engine's pending counts before and after a
+    wave, so they cannot disagree: a null-host row counted as pending but
+    never claimable would spin refill-only waves until max_waves."""
     return ((F.col("status") < STATUS_IN_FLIGHT)
-            & (F.col("crawler_count") < max_attempts)
+            & (F.col("crawler_count") < MAX_ATTEMPTS)
             & F.col("host").isNotNull())
 
 
 def dequeue(frontier: DataFrame, budgets: DataFrame,
-            salt_buckets: int = 8, max_attempts: int = 3) -> DataFrame:
+            salt_buckets: int = 8) -> DataFrame:
     """Claim this wave's work-list: per-host top-K_host by the priority
     total order, where K_host comes from the politeness token bucket.
 
@@ -129,7 +129,7 @@ def dequeue(frontier: DataFrame, budgets: DataFrame,
     ``budgets``: (host, grant int) — small, broadcast.
     """
     eligible = (frontier
-                .filter(eligibility_predicate(max_attempts))
+                .filter(eligibility_predicate())
                 .join(F.broadcast(budgets), "host", "inner")
                 .filter(F.col("grant") > 0))
     salted = with_url_key(eligible, salt_buckets)

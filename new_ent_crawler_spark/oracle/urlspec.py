@@ -41,6 +41,10 @@ STATUS_IN_FLIGHT = 2
 STATUS_FOUND = 3
 STATUS_NOT_FOUND = 4
 STATUS_EXACT = 5
+# fetches of one URL before it stays in its last status for good: an error
+# row is re-claimed until its crawler_count reaches this cap
+# (utils/RequestHelper.py:62-77)
+MAX_ATTEMPTS = 3
 
 # page-type scores: listing before detail (BASELINE.json north_star; the
 # reference fetches the listing at worker/worker.py:190 before the detail

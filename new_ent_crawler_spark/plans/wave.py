@@ -68,24 +68,21 @@ LINEAGE_PA, BUDGETS_PA = _control_schemas()
 class WaveEngine:
     def __init__(self, spark: SparkSession, data_dir: str, work_dir: str,
                  per_host_k: int = 4, max_waves: int = 64,
-                 salt_buckets: int = 8, max_attempts: int = 3,
+                 salt_buckets: int = 8,
                  expected_total_urls: int | None = None,
                  cache_pages: bool = True, compact_every: int = 8,
                  verify_unique_urls: bool = False):
-        """``expected_total_urls`` is accepted and ignored, because
-        perfbench/crawl.py still passes it: the seen set is the frontier
-        table itself, so there is no filter to size."""
+        """``expected_total_urls`` and ``cache_pages`` are accepted and
+        ignored, because perfbench/crawl.py still passes them: the seen set
+        is the frontier table itself, so there is no filter to size, and
+        each wave reads ``pages`` from storage, pruned to the claimed url
+        ranges."""
         self.spark = spark
         self.data_dir = data_dir
         self.work_dir = work_dir
         self.per_host_k = per_host_k
         self.max_waves = max_waves
         self.salt_buckets = salt_buckets
-        self.max_attempts = max_attempts
-        # caching the (url, html) projection avoids a parquet scan per wave;
-        # at 100 TB you would NOT cache — an Iceberg pages table bucketed by
-        # url lets the per-wave broadcast probe prune to claimed buckets
-        self.cache_pages = cache_pages
         # frontier commits are merge-on-read deltas (O(wave) per wave, not
         # O(frontier)); fold them into a fresh base every `compact_every`
         # waves so the read-side merge stays a broadcast-sized anti-join.
@@ -241,8 +238,7 @@ class WaveEngine:
 
         grants = spark.createDataFrame(PL.grants_pd(budgets_pdf),
                                        "host string, grant int")
-        claimed = FR.dequeue(frontier, grants,
-                             self.salt_buckets, self.max_attempts)
+        claimed = FR.dequeue(frontier, grants, self.salt_buckets)
         claimed = claimed.persist()
         t0 = _t("dq_plan", t0)   # driver-side dequeue DAG build
         # one job: materialize the claim cache AND produce the per-host
@@ -252,8 +248,7 @@ class WaveEngine:
                      .agg(F.count("*").alias("n"),
                           F.min("url").alias("lo"), F.max("url").alias("hi"))
                      .unionByName(
-                         frontier.filter(
-                             FR.eligibility_predicate(self.max_attempts))
+                         frontier.filter(FR.eligibility_predicate())
                          .agg(F.count("*").alias("n"))
                          .select(F.lit("\0pending").alias("host"), "n",
                                  F.lit(None).cast("string").alias("lo"),
@@ -344,8 +339,8 @@ class WaveEngine:
         # append is the wave's ONE materialization of the parse (it also
         # fills the cache); the hit count then comes free from the written
         # parquet footers, so the fetch-miss branch below (a driver-serial
-        # broadcast build + anti-join + union) is built ONLY when a claim
-        # actually missed; the common wave has zero misses.
+        # broadcast build + anti-join + parse + union) is built ONLY when a
+        # claim actually missed; the common wave has zero misses.
         t0 = _t("px_plan", t0)  # driver-side DAG build up to the write job
         snap = self.extracted_t.append(_ext_cols(parsed_hits),
                                        meta={"wave": wave})
@@ -371,28 +366,15 @@ class WaveEngine:
         if n_hits == n_claimed:
             parsed = parsed_hits
         else:
-            # fetch misses become error rows (retry budget via crawler_count,
-            # SURVEY.md §2.6) — derived from the PERSISTED parse output with
-            # a url-only anti-join, so the pages table is probed exactly once
-            # per wave; the error rows are built JVM-side, no second parse
-            link_t = ("array<struct<url:string,score:int,company:string>>")
-            missing = (claimed
-                       .join(F.broadcast(parsed_hits.select("url")),
+            # fetch misses: the claims with no page, found by a url-only
+            # anti-join against the PERSISTED parse output (the pages table
+            # is probed once per wave), go through the same page rule with
+            # no content — urlspec.analyze makes them error rows, which later
+            # waves claim again while crawler_count < MAX_ATTEMPTS
+            missing = PS.parse_pages(
+                claimed.join(F.broadcast(parsed_hits.select("url")),
                              "url", "left_anti")
-                       .select("url", "host", "company", "seed_id", "keyword",
-                               F.col("depth").cast("int").alias("depth"),
-                               F.col("priority").cast("int").alias("priority"),
-                               F.col("page_type_score").cast("int")
-                               .alias("page_type_score"),
-                               F.col("enqueue_wave").cast("long")
-                               .alias("enqueue_wave"),
-                               F.col("crawler_count").cast("int")
-                               .alias("crawler_count"),
-                               F.lit(FR.STATUS_ERROR).cast("int")
-                               .alias("status"),
-                               F.lit(False).alias("blocked"),
-                               F.lit(None).cast("string").alias("text"),
-                               F.lit(None).cast(link_t).alias("links")))
+                .withColumn("html", F.lit(None).cast("binary")))
             # coalesce the (tiny) miss branch before the union: claimed
             # carries the dequeue's shuffle partitioning, and a union has no
             # exchange boundary for AQE to coalesce, so without this every
@@ -431,29 +413,26 @@ class WaveEngine:
         # action is fused into this single generic-schema collect.
         #
         # "c" column = rows that will still be claim-eligible AFTER this
-        # wave's delta commits: for claims that's the post-update predicate
-        # (status < in-flight, crawler_count+1 under the retry cap); for new
-        # rows it's host-not-null (they enter pending with count 0).  With
-        # these two counters the wave knows the exact post-commit pending
-        # count, so drain() can stop without a probe wave (a full dequeue
-        # job whose only output is pending == 0).
-        claim_still_eligible = (
-            (F.col("status") < FR.STATUS_IN_FLIGHT)
-            & (F.col("crawler_count") + 1 < F.lit(self.max_attempts))
-            & F.col("host").isNotNull())
+        # wave's delta commits: the eligibility predicate over the claims'
+        # post-wave rows (`updated`, which the delta commits) and over the
+        # new rows.  With these two counters the wave knows the exact
+        # post-commit pending count, so drain() can stop without a probe
+        # wave (a full dequeue job whose only output is pending == 0).
+        updated = parsed.withColumn(
+            "crawler_count", (F.col("crawler_count") + 1).cast("int"))
         new_branch = (
             new_urls.agg(
                 F.count("*").alias("a"),
-                F.sum(F.col("host").isNotNull().cast("long")).alias("c"))
+                F.sum(FR.eligibility_predicate().cast("long")).alias("c"))
             .select(
                 F.lit("new").alias("kind"), F.lit(-1).alias("pid"),
                 "a", F.lit(0).cast("long").alias("b"), "c",
                 F.lit("").alias("s")))
-        ctrl = (parsed
+        ctrl = (updated
                 .groupBy(F.spark_partition_id().alias("pid"))
                 .agg(F.count("*").alias("a"),
                      F.sum(F.coalesce(F.size("links"), F.lit(0))).alias("b"),
-                     F.sum(claim_still_eligible.cast("long")).alias("c"),
+                     F.sum(FR.eligibility_predicate().cast("long")).alias("c"),
                      F.concat_ws(
                          "\x01",
                          F.collect_set(F.when(F.col("blocked"),
@@ -494,18 +473,13 @@ class WaveEngine:
 
         t0 = _t("budgets", t0)
         # frontier commit = one O(wave) merge-on-read delta: the claimed
-        # rows as upserts with their post-parse status and crawler_count+1,
-        # plus the newly discovered pending rows.  The delta is bounded by
-        # the politeness budgets, so at 10^10-frontier scale this write
-        # stays wave-sized, where rewriting the frontier would be an
-        # O(frontier) write and shuffle join per wave.
-        # the parse output carries every frontier column (crawler_count is a
-        # pass-through of the claim), so the status-merge upsert rows are a
-        # pure SELECT off the persisted parse cache — no claimed⋈parsed
-        # shuffle join per wave
-        claim_upd = parsed.select(
-            *[c for c in FR.FRONTIER_COLS if c != "crawler_count"],
-            (F.col("crawler_count") + 1).cast("int").alias("crawler_count"))
+        # rows as upserts with their post-parse status and crawler_count+1
+        # (`updated`, a pure SELECT off the persisted parse cache — no
+        # claimed⋈parsed shuffle join), plus the newly discovered pending
+        # rows.  The delta is bounded by the politeness budgets, so at
+        # 10^10-frontier scale this write stays wave-sized, where rewriting
+        # the frontier would be an O(frontier) write and shuffle join per
+        # wave.
         # a wave's delta is small: keep it in a few files so the per-wave
         # re-read doesn't accumulate hundreds of tiny tasks.  The two
         # branches are coalesced SEPARATELY (no extra shuffle — union just
@@ -518,7 +492,7 @@ class WaveEngine:
         # spec), keeping the dequeue scan O(pending) as the crawled
         # fraction grows.  Files holding retryable errors (status 1) stay
         # unprunable by min/max — correct: they contain eligible rows.
-        delta = (claim_upd.select(*FR.FRONTIER_COLS)
+        delta = (updated.select(*FR.FRONTIER_COLS)
                  .coalesce(4)
                  .unionByName(new_urls.select(*FR.FRONTIER_COLS)
                               .coalesce(4)))
@@ -577,8 +551,6 @@ class WaveEngine:
         rows_per_batch = PS.tune_arrow_batch(
             self.spark, os.path.join(self.data_dir, "pages.parquet"))
         self._avg_page_bytes = max(1024, (16 * 2**20) // rows_per_batch)
-        if self.cache_pages:
-            pages = pages.persist()
         all_stats = []
         for wave in range(start + 1, self.max_waves + 1):
             stats = self.run_wave(wave, pages)
@@ -596,8 +568,6 @@ class WaveEngine:
                 self._budgets_pdf = PL.spend_and_refill_pd(
                     self._budgets(), {})
                 self._commit_budgets(wave)
-        if self.cache_pages:
-            pages.unpersist()
         return all_stats
 
     # -- outputs -------------------------------------------------------------

@@ -14,7 +14,8 @@ from __future__ import annotations
 
 from .oracle import extract as X
 from .oracle import urlspec as U
-from .oracle.urlspec import STATUS_FOUND, STATUS_PENDING
+from .oracle.urlspec import (MAX_ATTEMPTS, STATUS_FOUND, STATUS_IN_FLIGHT,
+                             STATUS_PENDING)
 
 
 class SimFrontierEntry:
@@ -42,13 +43,11 @@ def order_key(e: SimFrontierEntry):
 
 class Simulator:
     def __init__(self, pages: dict, seeds: list[dict], robots: dict,
-                 per_host_k: int = 4, max_waves: int = 64,
-                 max_attempts: int = 3):
+                 per_host_k: int = 4, max_waves: int = 64):
         self.pages = pages
         self.robots = robots  # host -> (disallow list, crawl_delay)
         self.per_host_k = per_host_k
         self.max_waves = max_waves
-        self.max_attempts = max_attempts
         self.frontier: dict[str, SimFrontierEntry] = {}
         self.tokens: dict[str, float] = {}
         self.order_log: list[tuple] = []
@@ -78,7 +77,8 @@ class Simulator:
     def run(self):
         for wave in range(1, self.max_waves + 1):
             pending = [e for e in self.frontier.values()
-                       if e.status < 2 and e.attempts < self.max_attempts]
+                       if e.status < STATUS_IN_FLIGHT
+                       and e.attempts < MAX_ATTEMPTS]
             if not pending:
                 break
             # per-host top-K by the deterministic total order

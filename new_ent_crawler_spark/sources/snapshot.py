@@ -25,6 +25,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..parquet_meta import footer_rows
+
 
 class SnapshotTable:
     def __init__(self, path: str):
@@ -134,10 +136,7 @@ class SnapshotTable:
         """Row count of one data dir from parquet footer metadata only —
         driver-side, no Spark job (the Iceberg analogue: snapshot summary
         counts come from manifest metadata, not a scan)."""
-        import pyarrow.parquet as pq
-        base = os.path.join(self.path, data_dir)
-        return sum(pq.ParquetFile(os.path.join(base, f)).metadata.num_rows
-                   for f in os.listdir(base) if f.endswith(".parquet"))
+        return footer_rows(os.path.join(self.path, data_dir)) or 0
 
     def rollback_to(self, snap_id: int):
         m = self._read_manifest()
@@ -254,18 +253,11 @@ class DeltaTable(SnapshotTable):
         gate size-dependent strategies (e.g. broadcasting the seen side of
         an anti-join); an over-estimate degrades to the conservative
         strategy, never to a wrong result."""
-        import pyarrow.parquet as pq
         cur = self.current_snapshot()
         if cur is None:
             return None
-        total = 0
-        for d in cur["dirs"]:
-            base = os.path.join(self.path, d)
-            for f in os.listdir(base):
-                if f.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(base, f)).metadata.num_rows
-        return total
+        return sum(footer_rows(os.path.join(self.path, d)) or 0
+                   for d in cur["dirs"])
 
     def read(self, spark: SparkSession) -> DataFrame:
         cur = self.current_snapshot()

@@ -195,6 +195,39 @@ def test_ban_page_cools_host_down(spark, tiny_web, tmp_path):
                for w, u in order)
 
 
+def test_fetch_misses_match_simulator(spark, tmp_path):
+    """A web with section pages missing from ``pages``: each fetch miss is
+    an error row, re-claimed until its crawler_count reaches MAX_ATTEMPTS,
+    and the engine equals the simulator on order, seen set and statuses."""
+    web_dir = str(tmp_path / "web")
+    webgen.generate(web_dir, n_hosts=2, companies_per_host=2, seed=9,
+                    p_missing_section=0.3)
+    eng = WaveEngine(spark, web_dir, str(tmp_path / "work"), per_host_k=8,
+                     max_waves=64)
+    stats = eng.run()
+    sim = _simulator_for(web_dir, per_host_k=8, max_waves=64)
+    order = eng.crawl_order()
+    assert order == sim.crawl_order()
+    assert eng.seen_urls() == sim.seen_urls()
+    rows = {r.url: r for r in
+            eng.frontier().select("url", "status", "crawler_count").collect()}
+    assert {u: r.status for u, r in rows.items()} == sim.statuses()
+
+    on_web = set(webgen.load_fetch(web_dir))
+    missed = sorted(u for u, r in rows.items() if u not in on_web
+                    and r.status == U.STATUS_ERROR
+                    and r.crawler_count == U.MAX_ATTEMPTS)
+    assert missed
+    texts = {}
+    for r in (eng.extracted().filter(F.col("url").isin(missed))
+              .select("url", "text").collect()):
+        texts.setdefault(r.url, []).append(r.text)
+    for u in missed:
+        assert sum(1 for _, v in order if v == u) == U.MAX_ATTEMPTS
+        assert texts[u] == [None] * U.MAX_ATTEMPTS
+    assert stats[-1]["pending_after"] == 0
+
+
 def test_add_seeds_joins_frontier(spark, tiny_web, tmp_path):
     """Seeds added to a running crawl: the URLs the frontier lacks enter as
     one pending delta at the current wave, and the waves after it crawl
