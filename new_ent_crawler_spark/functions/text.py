@@ -106,83 +106,10 @@ def contamination_hits(docs, probes: list[str], text_col: str = "text"):
     an array literal: each document is scanned ONCE, JVM-side
     (``F.filter`` over the probe array with ``contains`` — no Python in
     the hot path, no cross join, no shuffle before the tiny per-probe
-    count aggregate).  At 10^4+ probes where per-doc linear probing
-    hurts, :func:`contamination_hits_ac` runs the same contract as an
-    Aho-Corasick ``mapInPandas`` stage (pytest-pinned equivalent); the
-    JVM path is the honest default."""
+    count aggregate)."""
     arr = F.array(*[F.lit(p) for p in probes])
     hit = docs.select(
         F.explode(F.filter(
             arr, lambda p: F.col(text_col).contains(p))).alias("probe"))
     return hit.groupBy("probe").agg(
         F.count(F.lit(1)).alias("n_docs_hit"))
-
-
-def contamination_hits_ac(docs, probes: list[str], text_col: str = "text"):
-    """Aho-Corasick variant of :func:`contamination_hits` for LARGE probe
-    sets: one automaton pass per document instead of len(probes)
-    substring scans, so per-doc cost is O(len(text)) regardless of probe
-    count.
-
-    The automaton (goto/fail/output tables) is built once on the driver
-    — O(total probe chars), small by the same argument that makes probes
-    broadcastable — and ships to executors inside the mapInPandas
-    closure.  Per probe, a document counts AT MOST ONCE (set semantics),
-    matching :func:`contamination_hits` exactly; pytest pins the
-    equivalence.  Same output schema: (probe, n_docs_hit)."""
-    from collections import deque
-
-    # build the automaton driver-side: classic Aho-Corasick
-    goto: list[dict[str, int]] = [{}]
-    out: list[set[int]] = [set()]
-    for pi, p in enumerate(probes):
-        s = 0
-        for ch in p:
-            nxt = goto[s].get(ch)
-            if nxt is None:
-                goto.append({})
-                out.append(set())
-                nxt = len(goto) - 1
-                goto[s][ch] = nxt
-            s = nxt
-        out[s].add(pi)
-    fail = [0] * len(goto)
-    dq = deque(goto[0].values())
-    while dq:
-        s = dq.popleft()
-        for ch, t in goto[s].items():
-            dq.append(t)
-            f = fail[s]
-            while f and ch not in goto[f]:
-                f = fail[f]
-            fail[t] = goto[f].get(ch, 0) if goto[f].get(ch, 0) != t else 0
-            out[t] |= out[fail[t]]
-
-    probe_list = list(probes)
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            counts: dict[int, int] = {}
-            for text in pdf[text_col]:
-                if text is None:
-                    continue
-                s = 0
-                seen: set[int] = set()
-                for ch in text:
-                    while s and ch not in goto[s]:
-                        s = fail[s]
-                    s = goto[s].get(ch, 0)
-                    if out[s]:
-                        seen |= out[s]
-                for pi in seen:
-                    counts[pi] = counts.get(pi, 0) + 1
-            yield pd.DataFrame(
-                [(probe_list[pi], n) for pi, n in counts.items()],
-                columns=["probe", "n_docs_hit"]).astype(
-                    {"probe": "string", "n_docs_hit": "int64"})
-
-    partial = docs.select(text_col).mapInPandas(
-        run, schema="probe string, n_docs_hit long")
-    return partial.groupBy("probe").agg(
-        F.sum("n_docs_hit").alias("n_docs_hit"))

@@ -528,55 +528,6 @@ def encode_mp3_stream(frame_specs, sample_rate: int = 44100,
     return b"".join(out)
 
 
-def mp3_header_features(ids: DataFrame) -> DataFrame:
-    """Synthesize -> header-scan through the REAL MP3 frame walker,
-    mirroring :func:`wav_roundtrip_features` for the compressed-audio
-    column type (the reference crawler stores opaque media bytes; this is
-    the metadata pass over them).
-
-    Per id, worker-side: a VBR stream of ``6 + doc_id % 5`` frames whose
-    bitrate index and padding bit derive from ``md5(f"{doc_id}:mp3:{f}")``
-    (index 1 + b0 % 14 — every legal Table B.1 row exercised — padding
-    b1 % 2), behind a 22-byte ID3v2.3 tag, serialized with
-    :func:`encode_mp3_stream` and walked back by
-    :func:`scan_mp3_headers`.  Emits frame count, total bytes, duration,
-    bitrate sum, and the header digest; the DuckDB oracle reproduces all
-    of them from md5 hex arithmetic + the Table B.1 CASE — a defect in
-    header packing, the bitrate table, syncsafe tag skip, or the frame-
-    length formula breaks the row."""
-    out_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("n_frames", T.IntegerType(), False),
-        T.StructField("n_bytes", T.IntegerType(), False),
-        T.StructField("sample_rate", T.IntegerType(), False),
-        T.StructField("duration_ms", T.LongType(), False),
-        T.StructField("sum_kbps", T.LongType(), False),
-        T.StructField("hdr_md5", T.StringType(), False),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                specs = []
-                for f in range(6 + did % 5):
-                    d = hashlib.md5(f"{did}:mp3:{f}".encode()).digest()
-                    specs.append((1 + d[0] % 14, d[1] % 2,
-                                  f"{did}:mp3fill:{f}".encode()))
-                stream = encode_mp3_stream(
-                    specs, id3_body=hashlib.md5(
-                        f"{did}:id3".encode()).digest()[:11] * 2)
-                s = scan_mp3_headers(stream)
-                rows.append((did, s["n_frames"], s["n_bytes"],
-                             s["sample_rate"], s["duration_ms"],
-                             s["sum_kbps"], s["hdr_md5"]))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              out_schema.fields])
-
-    return ids.select("doc_id").mapInPandas(run, schema=out_schema)
-
-
 # -- JPEG: real baseline codec (grayscale, pure numpy) ----------------------
 #
 # Baseline sequential DCT JPEG per ITU-T T.81: 8x8 FDCT/IDCT, zigzag,
@@ -1465,7 +1416,43 @@ def sample_frames(media: DataFrame, every_ms: int = 1000,
         run, schema=FRAME_SCHEMA)
 
 
-BMP_FEATURE_SCHEMA = T.StructType([
+def _per_doc(ids: DataFrame, schema: T.StructType, rows_of) -> DataFrame:
+    """One Arrow-batched ``mapInPandas`` over ``ids.doc_id``, shuffle-free:
+    ``rows_of(doc_id)`` returns that document's output rows as tuples in
+    ``schema`` order.  The harness of the per-document codec round trips
+    below, whose DuckDB oracles rebuild every row from md5 arithmetic."""
+    cols = [f.name for f in schema.fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame([r for did in pdf["doc_id"]
+                                for r in rows_of(int(did))], columns=cols)
+
+    return ids.select("doc_id").mapInPandas(run, schema=schema)
+
+
+def _hex_md5(a) -> str:
+    """md5 of the hex of an array's bytes: the digest every oracle
+    rebuilds from md5 string arithmetic."""
+    return hashlib.md5(a.tobytes().hex().encode()).hexdigest()
+
+
+def _rgb_sums(a) -> tuple[int, int, int]:
+    """Per-channel sums of an ``...x3`` RGB array."""
+    r, g, b = a.reshape(-1, 3).astype("int64").sum(axis=0)
+    return int(r), int(g), int(b)
+
+
+def _md5_image(prefix: str, height: int, width: int):
+    """``height x width`` RGB image whose row ``y`` is the first
+    ``3*width`` bytes of ``md5(f"{prefix}{y}")`` (so ``width <= 5``)."""
+    import numpy as np
+    rows = b"".join(hashlib.md5(f"{prefix}{y}".encode()).digest()[:3 * width]
+                    for y in range(height))
+    return np.frombuffer(rows, np.uint8).reshape(height, width, 3)
+
+
+RGB_FEATURE_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
     T.StructField("width", T.IntegerType(), False),
     T.StructField("height", T.IntegerType(), False),
@@ -1476,119 +1463,65 @@ BMP_FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def bmp_roundtrip_features(ids: DataFrame, width: int = 4,
-                           height: int = 4) -> DataFrame:
+def bmp_roundtrip_features(ids: DataFrame) -> DataFrame:
     """Encode -> decode -> feature-extract through the REAL BMP codec.
 
-    Per id, worker-side: synthesize a deterministic ``width x height`` RGB
-    image (row ``y``'s pixel bytes are the first ``3*width`` bytes of
-    ``md5(f"{doc_id}:{y}")``, laid out as the BGR triples a BMP stores),
-    serialize it with :func:`encode_bmp`, decode it back with
-    :func:`decode_image`, and emit per-channel pixel sums plus the md5 of
-    the decoded RGB hex string.  The DuckDB oracle reproduces the exact
-    same sums and digest from md5 string arithmetic alone, so any
-    byte-level codec defect (channel order, row flip, stride) breaks the
-    hash.  Arrow-batched mapInPandas; only ids shuffle-free pass through."""
-    import hashlib as _hl
+    Per id, worker-side: synthesize a deterministic 4x4 RGB image (row
+    ``y``'s pixel bytes are the first 12 bytes of ``md5(f"{doc_id}:{y}")``,
+    laid out as the BGR triples a BMP stores), serialize it with
+    :func:`encode_bmp`, decode it back with :func:`decode_image`, and emit
+    per-channel pixel sums plus the md5 of the decoded RGB hex string.
+    The DuckDB oracle reproduces the exact same sums and digest from md5
+    string arithmetic alone, so any byte-level codec defect (channel
+    order, row flip, stride) breaks the hash."""
+    def rows_of(did):
+        # file stores BGR: B=row[3x], G=row[3x+1], R=row[3x+2]
+        px = _md5_image(f"{did}:", 4, 4)[:, :, ::-1]
+        decoded = decode_image(encode_bmp(px))
+        return [(did, decoded.shape[1], decoded.shape[0],
+                 *_rgb_sums(decoded), _hex_md5(decoded))]
 
-    if width * 3 > 16:
-        raise ValueError("row bytes must fit one md5 digest (width <= 5)")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                px = np.zeros((height, width, 3), dtype=np.uint8)
-                for y in range(height):
-                    row = _hl.md5(f"{did}:{y}".encode()).digest()[:width * 3]
-                    # file stores BGR: B=row[3x], G=row[3x+1], R=row[3x+2]
-                    bgr = np.frombuffer(row, np.uint8).reshape(width, 3)
-                    px[y] = bgr[:, ::-1]
-                decoded = decode_image(encode_bmp(px))
-                s = decoded.astype(np.int64).sum(axis=(0, 1))
-                rows.append((did, decoded.shape[1], decoded.shape[0],
-                             int(s[0]), int(s[1]), int(s[2]),
-                             _hl.md5(decoded.tobytes().hex().encode())
-                             .hexdigest()))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              BMP_FEATURE_SCHEMA.fields])
-
-    return ids.select("doc_id").mapInPandas(run, schema=BMP_FEATURE_SCHEMA)
+    return _per_doc(ids, RGB_FEATURE_SCHEMA, rows_of)
 
 
-def png_roundtrip_features(ids: DataFrame, width: int = 4,
-                           height: int = 5) -> DataFrame:
+def png_roundtrip_features(ids: DataFrame) -> DataFrame:
     """Encode -> decode -> feature-extract through the REAL PNG codec
     (compressed: zlib deflate + scanline filters), mirroring
     :func:`bmp_roundtrip_features`.
 
-    Per id, worker-side: synthesize a deterministic ``width x height`` RGB
-    image (row ``y``'s pixels are the first ``3*width`` bytes of
+    Per id, worker-side: synthesize a deterministic 4x5 (width x height)
+    RGB image (row ``y``'s pixels are the first 12 bytes of
     ``md5(f"{doc_id}:png:{y}")`` taken as straight RGB triples), serialize
     with :func:`encode_png` in ``cycle`` mode — row ``y`` uses PNG filter
-    ``y % 5``, so the default height 5 exercises None/Sub/Up/Average/Paeth
-    — decode back through :func:`decode_image`, and emit per-channel sums
-    plus the md5 of the decoded RGB hex.  The DuckDB oracle reproduces the
+    ``y % 5``, so the 5 rows exercise None/Sub/Up/Average/Paeth — decode
+    back through :func:`decode_image`, and emit per-channel sums plus the
+    md5 of the decoded RGB hex.  The DuckDB oracle reproduces the
     identical values from md5 string arithmetic alone: a defect in ANY
     filter, the inflate plumbing, or chunk CRC handling breaks the hash."""
-    import hashlib as _hl
+    def rows_of(did):
+        px = _md5_image(f"{did}:png:", 5, 4)
+        decoded = decode_image(encode_png(px, filter_mode="cycle"))
+        return [(did, decoded.shape[1], decoded.shape[0],
+                 *_rgb_sums(decoded), _hex_md5(decoded))]
 
-    if width * 3 > 16:
-        raise ValueError("row bytes must fit one md5 digest (width <= 5)")
-
-    out_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("sum_r", T.LongType(), False),
-        T.StructField("sum_g", T.LongType(), False),
-        T.StructField("sum_b", T.LongType(), False),
-        T.StructField("px_md5", T.StringType(), False),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                px = np.zeros((height, width, 3), dtype=np.uint8)
-                for y in range(height):
-                    row = _hl.md5(
-                        f"{did}:png:{y}".encode()).digest()[:width * 3]
-                    px[y] = np.frombuffer(row, np.uint8).reshape(width, 3)
-                decoded = decode_image(encode_png(px, filter_mode="cycle"))
-                s = decoded.astype(np.int64).sum(axis=(0, 1))
-                rows.append((did, decoded.shape[1], decoded.shape[0],
-                             int(s[0]), int(s[1]), int(s[2]),
-                             _hl.md5(decoded.tobytes().hex().encode())
-                             .hexdigest()))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              out_schema.fields])
-
-    return ids.select("doc_id").mapInPandas(run, schema=out_schema)
+    return _per_doc(ids, RGB_FEATURE_SCHEMA, rows_of)
 
 
-def wav_roundtrip_features(ids: DataFrame, blocks: int = 2,
-                           sample_rate: int = 16000) -> DataFrame:
+def wav_roundtrip_features(ids: DataFrame) -> DataFrame:
     """Encode -> decode -> feature-extract through the REAL WAV codec,
     mirroring :func:`bmp_roundtrip_features` for the audio column type.
 
-    Per id, worker-side: synthesize ``blocks`` md5 digests
+    Per id, worker-side: synthesize 2 md5 digests
     ``md5(f"{doc_id}:wav:{blk}")`` and take their 16 bytes each as 4
-    stereo frames of little-endian int16 PCM (so ``4*blocks`` frames, 2
-    channels), serialize with :func:`encode_wav`, decode back through
+    stereo frames of little-endian int16 PCM (so 8 frames, 2 channels),
+    serialize with :func:`encode_wav` at 16 kHz, decode back through
     :func:`decode_audio`, and emit per-channel sample sums, frame/rate
     metadata, and the md5 of the decoded raw sample bytes' hex.  The
     DuckDB oracle reproduces the identical sums from hex-substring
     arithmetic (lo + 256*hi, sign-corrected) and the digest as the md5 of
     the concatenated block hex — any defect in header parsing, channel
     interleave, or byte order breaks the hash."""
-    import hashlib as _hl
-
-    out_schema = T.StructType([
+    schema = T.StructType([
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("n_frames", T.IntegerType(), False),
         T.StructField("channels", T.IntegerType(), False),
@@ -1598,27 +1531,89 @@ def wav_roundtrip_features(ids: DataFrame, blocks: int = 2,
         T.StructField("pcm_md5", T.StringType(), False),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows_of(did):
         import numpy as np
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                raw = b"".join(
-                    _hl.md5(f"{did}:wav:{blk}".encode()).digest()
-                    for blk in range(blocks))
-                frames = np.frombuffer(raw, "<i2").reshape(-1, 2)
-                decoded, rate = decode_audio(
-                    encode_wav(frames, sample_rate))
-                s = decoded.astype(np.int64).sum(axis=0)
-                rows.append((did, decoded.shape[0], decoded.shape[1],
-                             rate, int(s[0]), int(s[1]),
-                             _hl.md5(decoded.tobytes().hex().encode())
-                             .hexdigest()))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              out_schema.fields])
+        raw = b"".join(hashlib.md5(f"{did}:wav:{blk}".encode()).digest()
+                       for blk in range(2))
+        decoded, rate = decode_audio(
+            encode_wav(np.frombuffer(raw, "<i2").reshape(-1, 2), 16000))
+        s = decoded.astype(np.int64).sum(axis=0)
+        return [(did, decoded.shape[0], decoded.shape[1], rate,
+                 int(s[0]), int(s[1]), _hex_md5(decoded))]
 
-    return ids.select("doc_id").mapInPandas(run, schema=out_schema)
+    return _per_doc(ids, schema, rows_of)
+
+
+def mp3_header_features(ids: DataFrame) -> DataFrame:
+    """Synthesize -> header-scan through the REAL MP3 frame walker,
+    mirroring :func:`wav_roundtrip_features` for the compressed-audio
+    column type (the reference crawler stores opaque media bytes; this is
+    the metadata pass over them).
+
+    Per id, worker-side: a VBR stream of ``6 + doc_id % 5`` frames whose
+    bitrate index and padding bit derive from ``md5(f"{doc_id}:mp3:{f}")``
+    (index 1 + b0 % 14 — every legal Table B.1 row exercised — padding
+    b1 % 2), behind a 22-byte ID3v2.3 tag, serialized with
+    :func:`encode_mp3_stream` and walked back by
+    :func:`scan_mp3_headers`.  Emits frame count, total bytes, duration,
+    bitrate sum, and the header digest; the DuckDB oracle reproduces all
+    of them from md5 hex arithmetic + the Table B.1 CASE — a defect in
+    header packing, the bitrate table, syncsafe tag skip, or the frame-
+    length formula breaks the row."""
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("n_frames", T.IntegerType(), False),
+        T.StructField("n_bytes", T.IntegerType(), False),
+        T.StructField("sample_rate", T.IntegerType(), False),
+        T.StructField("duration_ms", T.LongType(), False),
+        T.StructField("sum_kbps", T.LongType(), False),
+        T.StructField("hdr_md5", T.StringType(), False),
+    ])
+
+    def rows_of(did):
+        specs = []
+        for f in range(6 + did % 5):
+            d = hashlib.md5(f"{did}:mp3:{f}".encode()).digest()
+            specs.append((1 + d[0] % 14, d[1] % 2,
+                          f"{did}:mp3fill:{f}".encode()))
+        s = scan_mp3_headers(encode_mp3_stream(
+            specs,
+            id3_body=hashlib.md5(f"{did}:id3".encode()).digest()[:11] * 2))
+        return [(did, s["n_frames"], s["n_bytes"], s["sample_rate"],
+                 s["duration_ms"], s["sum_kbps"], s["hdr_md5"])]
+
+    return _per_doc(ids, schema, rows_of)
+
+
+GRAY_FEATURE_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType(), False),
+    T.StructField("width", T.IntegerType(), False),
+    T.StructField("height", T.IntegerType(), False),
+    T.StructField("sum_px", T.LongType(), False),
+    T.StructField("px_md5", T.StringType(), False),
+])
+
+
+def _flat_blocks(did: int, tag: str, channels: int):
+    """16x16 image of four flat 8x8 blocks valued by the first 4 bytes of
+    ``md5(f"{did}:{tag}")``: ``(16, 16)`` gray for ``channels == 1``, else
+    ``(16, 16, 3)`` with each gray byte tripled."""
+    import numpy as np
+    px = np.zeros((16, 16, channels), np.uint8)
+    px[:8, :8], px[:8, 8:], px[8:, :8], px[8:, 8:] = \
+        hashlib.md5(f"{did}:{tag}".encode()).digest()[:4]
+    return px[:, :, 0] if channels == 1 else px
+
+
+def _jpeg_flat_features(ids: DataFrame, tag: str, channels: int):
+    """Encode -> decode -> row of the :func:`_flat_blocks` image for both
+    JPEG operators."""
+    def rows_of(did):
+        decoded = decode_jpeg(encode_jpeg(_flat_blocks(did, tag, channels)))
+        return [(did, decoded.shape[1], decoded.shape[0],
+                 int(decoded.astype("int64").sum()), _hex_md5(decoded))]
+
+    return _per_doc(ids, GRAY_FEATURE_SCHEMA, rows_of)
 
 
 def jpeg_roundtrip_features(ids: DataFrame) -> DataFrame:
@@ -1640,35 +1635,7 @@ def jpeg_roundtrip_features(ids: DataFrame) -> DataFrame:
     both from md5 string arithmetic alone; the general lossy path
     (non-flat content, Annex K table) is pytest-covered where tolerance
     assertions are possible."""
-    import hashlib as _hl
-
-    out_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("sum_px", T.LongType(), False),
-        T.StructField("px_md5", T.StringType(), False),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blk = _hl.md5(f"{did}:jpg".encode()).digest()[:4]
-                px = np.zeros((16, 16), dtype=np.uint8)
-                px[:8, :8], px[:8, 8:] = blk[0], blk[1]
-                px[8:, :8], px[8:, 8:] = blk[2], blk[3]
-                decoded = decode_jpeg(encode_jpeg(px))
-                rows.append((did, decoded.shape[1], decoded.shape[0],
-                             int(decoded.astype(np.int64).sum()),
-                             _hl.md5(decoded.tobytes().hex().encode())
-                             .hexdigest()))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              out_schema.fields])
-
-    return ids.select("doc_id").mapInPandas(run, schema=out_schema)
+    return _jpeg_flat_features(ids, "jpg", 1)
 
 
 def jpeg_color_roundtrip_features(ids: DataFrame) -> DataFrame:
@@ -1680,35 +1647,7 @@ def jpeg_color_roundtrip_features(ids: DataFrame) -> DataFrame:
     chroma planes are exactly 128, so their blocks quantize to all
     zeros), letting the DuckDB oracle rebuild the decoded RGB bytes from
     md5 hex with each gray byte tripled."""
-    import hashlib as _hl
-
-    out_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("sum_px", T.LongType(), False),
-        T.StructField("px_md5", T.StringType(), False),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blk = _hl.md5(f"{did}:jpgc".encode()).digest()[:4]
-                rgb = np.zeros((16, 16, 3), dtype=np.uint8)
-                rgb[:8, :8], rgb[:8, 8:] = blk[0], blk[1]
-                rgb[8:, :8], rgb[8:, 8:] = blk[2], blk[3]
-                decoded = decode_jpeg(encode_jpeg(rgb))
-                rows.append((did, decoded.shape[1], decoded.shape[0],
-                             int(decoded.astype(np.int64).sum()),
-                             _hl.md5(decoded.tobytes().hex().encode())
-                             .hexdigest()))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              out_schema.fields])
-
-    return ids.select("doc_id").mapInPandas(run, schema=out_schema)
+    return _jpeg_flat_features(ids, "jpgc", 3)
 
 
 GIF_FEATURE_SCHEMA = T.StructType([
@@ -1735,57 +1674,38 @@ def gif_roundtrip_features(ids: DataFrame) -> DataFrame:
     per-channel pixel sums + the md5 of the decoded RGB hex.  The DuckDB
     oracle rebuilds the exact same sums and digest from md5 string
     arithmetic (palette lookup by hex-slice), so a defect anywhere in the
-    LZW width schedule, palette order, or index stream breaks the hash.
-    Arrow-batched mapInPandas; only ids pass through, shuffle-free."""
-    import hashlib as _hl
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    LZW width schedule, palette order, or index stream breaks the hash."""
+    def rows_of(did):
         import numpy as np
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                pal = np.frombuffer(
-                    _hl.md5(f"{did}:gp".encode()).digest()[:15],
-                    np.uint8).reshape(5, 3)
-                idx = np.frombuffer(
-                    _hl.md5(f"{did}:gi".encode()).digest(),
-                    np.uint8).astype(np.int64) % 5
-                px = pal[idx].reshape(4, 4, 3)
-                decoded, nf = decode_gif(encode_gif(px))
-                assert (decoded == px).all()
-                s = decoded.astype(np.int64).sum(axis=(0, 1))
-                rows.append((did, decoded.shape[1], decoded.shape[0], nf,
-                             int(s[0]), int(s[1]), int(s[2]),
-                             _hl.md5(decoded.tobytes().hex().encode())
-                             .hexdigest()))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              GIF_FEATURE_SCHEMA.fields])
+        pal = np.frombuffer(hashlib.md5(f"{did}:gp".encode()).digest()[:15],
+                            np.uint8).reshape(5, 3)
+        idx = np.frombuffer(hashlib.md5(f"{did}:gi".encode()).digest(),
+                            np.uint8).astype(np.int64) % 5
+        px = pal[idx].reshape(4, 4, 3)
+        decoded, nf = decode_gif(encode_gif(px))
+        assert (decoded == px).all()
+        return [(did, decoded.shape[1], decoded.shape[0], nf,
+                 *_rgb_sums(decoded), _hex_md5(decoded))]
 
-    return ids.select("doc_id").mapInPandas(run, schema=GIF_FEATURE_SCHEMA)
+    return _per_doc(ids, GIF_FEATURE_SCHEMA, rows_of)
 
 
-def avi_frame_sample_features(ids: DataFrame, n_frames: int = 6,
-                              fps: int = 4,
-                              every_ms: int = 500) -> DataFrame:
+def avi_frame_sample_features(ids: DataFrame) -> DataFrame:
     """Encode -> decode -> frame-sample -> feature-extract through the
     REAL AVI container codec: the video analogue of
     :func:`png_roundtrip_features`.
 
-    Per id, worker-side: synthesize ``n_frames`` deterministic 4x2 RGB
-    frames (frame ``f`` row ``y`` = first 12 bytes of
-    ``md5(f"{doc_id}:avi:{f}:{y}")`` as straight RGB triples), serialize
-    with :func:`encode_avi` at ``fps``, decode back through
-    :func:`decode_avi` (real RIFF chunk walk: hdrl/strl headers, movi
-    frame chunks, idx1 skipped), then sample one frame per ``every_ms``
-    of timeline — frame index ``t*fps//1000``, the same arithmetic the
-    DuckDB oracle replays — and emit per-channel sums plus the md5 of
-    each sampled frame's RGB hex.  A defect anywhere in header parsing,
-    frame chunk boundaries, bottom-up row order, BGR channel order, or
-    the sampling arithmetic breaks the hash."""
-    import hashlib as _hl
-
-    out_schema = T.StructType([
+    Per id, worker-side: synthesize 6 deterministic 4x2 RGB frames (frame
+    ``f`` row ``y`` = first 12 bytes of ``md5(f"{doc_id}:avi:{f}:{y}")``
+    as straight RGB triples), serialize with :func:`encode_avi` at 4 fps,
+    decode back through :func:`decode_avi` (real RIFF chunk walk:
+    hdrl/strl headers, movi frame chunks, idx1 skipped), then sample one
+    frame per 500 ms of timeline — frame index ``t*fps//1000``, the same
+    arithmetic the DuckDB oracle replays — and emit per-channel sums plus
+    the md5 of each sampled frame's RGB hex.  A defect anywhere in header
+    parsing, frame chunk boundaries, bottom-up row order, BGR channel
+    order, or the sampling arithmetic breaks the hash."""
+    schema = T.StructType([
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("frame_no", T.IntegerType(), False),
         T.StructField("ts_ms", T.IntegerType(), False),
@@ -1795,35 +1715,19 @@ def avi_frame_sample_features(ids: DataFrame, n_frames: int = 6,
         T.StructField("px_md5", T.StringType(), False),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows_of(did):
         import numpy as np
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                frames = np.zeros((n_frames, 2, 4, 3), np.uint8)
-                for f in range(n_frames):
-                    for y in range(2):
-                        raw = _hl.md5(
-                            f"{did}:avi:{f}:{y}".encode()).digest()[:12]
-                        frames[f, y] = np.frombuffer(
-                            raw, np.uint8).reshape(4, 3)
-                vid, got_fps = decode_avi(encode_avi(frames, fps=fps))
-                t = 0
-                while True:
-                    idx = int(t * got_fps // 1000)
-                    if idx >= len(vid):
-                        break
-                    s = vid[idx].astype(np.int64).sum(axis=(0, 1))
-                    rows.append((did, idx, t, int(s[0]), int(s[1]),
-                                 int(s[2]),
-                                 _hl.md5(vid[idx].tobytes().hex().encode())
-                                 .hexdigest()))
-                    t += every_ms
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              out_schema.fields])
+        frames = np.stack([_md5_image(f"{did}:avi:{f}:", 2, 4)
+                           for f in range(6)])
+        vid, fps = decode_avi(encode_avi(frames, fps=4))
+        rows, t = [], 0
+        while (idx := int(t * fps // 1000)) < len(vid):
+            rows.append((did, idx, t, *_rgb_sums(vid[idx]),
+                         _hex_md5(vid[idx])))
+            t += 500
+        return rows
 
-    return ids.select("doc_id").mapInPandas(run, schema=out_schema)
+    return _per_doc(ids, schema, rows_of)
 
 
 def pages_as_media(pages: DataFrame) -> DataFrame:

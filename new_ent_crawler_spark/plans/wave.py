@@ -70,8 +70,7 @@ class WaveEngine:
                  per_host_k: int = 4, max_waves: int = 64,
                  salt_buckets: int = 8,
                  expected_total_urls: int | None = None,
-                 cache_pages: bool = True, compact_every: int = 8,
-                 verify_unique_urls: bool = False):
+                 cache_pages: bool = True, compact_every: int = 8):
         """``expected_total_urls`` and ``cache_pages`` are accepted and
         ignored, because perfbench/crawl.py still passes them: the seen set
         is the frontier table itself, so there is no filter to size, and
@@ -92,11 +91,6 @@ class WaveEngine:
         # homogeneous files whose min/max footer stats the eligibility
         # scan prunes on (see append_delta below).
         self.compact_every = compact_every
-        # opt-in load-time check of the pages unique-url invariant (see
-        # pages() docstring); off by default — at 10^10 rows it is a real
-        # (if column-pruned) aggregate job, and deduped-at-ingest is the
-        # documented contract
-        self.verify_unique_urls = verify_unique_urls
 
         self.frontier_t = DeltaTable(os.path.join(work_dir, "frontier"),
                                      key_col="url")
@@ -122,10 +116,7 @@ class WaveEngine:
         INVARIANT: urls are unique.  Real Common-Crawl-style snapshots can
         carry duplicate captures of a url; dedup them at ingest (keep the
         latest warc_ts) — the per-wave fetch-miss detection counts hits
-        against claims and duplicate hits would mask misses.  Pass
-        ``verify_unique_urls=True`` to pay one url-column aggregate at run
-        start that asserts the invariant (cheap relative to a crawl: the
-        scan is column-pruned to urls only); the wave loop additionally
+        against claims and duplicate hits would mask misses.  The wave loop
         fails loudly on the first wave where n_hits > n_claimed.
         """
         return self.spark.read.parquet(
@@ -349,19 +340,17 @@ class WaveEngine:
         t0 = _t("px_footer", t0)
 
         # miss detection relies on the pages table having UNIQUE urls (see
-        # pages() docstring; verify_unique_urls opts into a load-time check).
-        # With duplicate captures a duplicate hit could exactly offset a
-        # missed claim (n_hits == n_claimed with a miss), so the missed URL
-        # would silently stay eligible forever.  A dup that is NOT offset by
-        # a miss shows up as n_hits > n_claimed — fail loudly there so a
-        # violated invariant surfaces on the first non-masked wave instead
-        # of livelocking.
+        # pages() docstring).  With duplicate captures a duplicate hit
+        # could exactly offset a missed claim (n_hits == n_claimed with a
+        # miss), so the missed URL would silently stay eligible forever.  A
+        # dup that is NOT offset by a miss shows up as n_hits > n_claimed —
+        # fail loudly there so a violated invariant surfaces on the first
+        # non-masked wave instead of livelocking.
         if n_hits > n_claimed:
             raise RuntimeError(
                 f"wave {wave}: {n_hits} fetch hits for {n_claimed} claimed "
                 "urls — the pages table has duplicate captures per url; "
-                "dedup it at ingest (keep latest warc_ts) or pass "
-                "verify_unique_urls=True to catch this at startup")
+                "dedup it at ingest (keep latest warc_ts)")
         missing = None
         if n_hits == n_claimed:
             parsed = parsed_hits
@@ -536,15 +525,6 @@ class WaveEngine:
         self._rollback_appends(start)
         self._budgets_pdf = None  # reload politeness state post-rollback
         pages = self.pages().select("url", "html")
-        if self.verify_unique_urls:
-            dup = (self.pages().select("url").groupBy("url")
-                   .agg(F.count("*").alias("n")).filter("n > 1").limit(1)
-                   .collect())
-            if dup:
-                raise RuntimeError(
-                    f"pages table violates the unique-url invariant "
-                    f"(e.g. {dup[0].url!r} x{dup[0].n}); dedup at ingest "
-                    "(keep latest warc_ts) before crawling")
         # bytes-bounded Arrow batches for the parse stage (row cap derived
         # from the parquet footers' per-column byte stats — driver-side,
         # no Spark job)

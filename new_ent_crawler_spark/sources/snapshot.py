@@ -211,17 +211,14 @@ class DeltaTable(SnapshotTable):
         return self._new_snapshot([new_dir], meta)
 
     def overwrite_rows(self, rows, schema, meta: dict | None = None) -> dict:
-        """Driver-side base write (pyarrow, no Spark job) for bounded-size
-        initial states — e.g. seeding a crawl frontier from a footer-small
-        seed list.  Tags rows with the snapshot's wave as the commit
-        version, mirroring ``overwrite``."""
+        """Driver-side base write (pyarrow, no Spark job) of the
+        ``pa.Table`` ``rows`` for bounded-size initial states — e.g.
+        seeding a crawl frontier from a footer-small seed list.  Tags rows
+        with the snapshot's wave as the commit version, mirroring
+        ``overwrite``."""
         import pyarrow as pa
         meta = dict(meta or {})
-        if not isinstance(rows, pa.Table):
-            rows = pa.Table.from_pandas(rows, schema=schema,
-                                        preserve_index=False)
-        else:
-            rows = rows.cast(schema)
+        rows = rows.cast(schema)
         version = int(meta.get("wave", 0))
         rows = rows.append_column(
             self.VERSION_COL,

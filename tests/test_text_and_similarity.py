@@ -298,7 +298,10 @@ def test_exact_pair_topk_equals_naive_self_join(spark):
 
 def test_contamination_hits_counts_and_misses(spark):
     """Planted probes: one hits two docs, one hits a single doc, one
-    hits nothing (absent from the output, not a zero row)."""
+    hits nothing (absent from the output, not a zero row).  The
+    overlapping-suffix set (he / she / hers / his) counts a doc once per
+    probe however often the probe occurs in it, and a NULL text hits
+    nothing."""
     from new_ent_crawler_spark.functions.text import contamination_hits
     docs = spark.createDataFrame(
         [(1, "the quick brown fox"), (2, "a quick brown dog"),
@@ -308,32 +311,13 @@ def test_contamination_hits_counts_and_misses(spark):
                               ["quick brown", "dog", "unicorn"]).collect()}
     assert got == {"quick brown": 2, "dog": 1}
 
-
-def test_contamination_ac_equals_jvm_scan(spark):
-    """The Aho-Corasick mapInPandas variant returns exactly the JVM
-    filter-scan's counts — including the classic overlapping-suffix probe
-    set (he / she / hers / his) and real-corpus probes."""
-    from new_ent_crawler_spark.functions.text import (contamination_hits,
-                                                      contamination_hits_ac)
     docs = spark.createDataFrame(
         [(1, "she sells seashells"), (2, "his and hers"),
          (3, "ushers usher"), (4, None), (5, "nothing")],
         "doc_id long, text string")
-    probes = ["he", "she", "hers", "his"]
-    jvm = {r.probe: r.n_docs_hit for r in
-           contamination_hits(docs, probes).collect()}
-    ac = {r.probe: r.n_docs_hit for r in
-          contamination_hits_ac(docs, probes).collect()}
-    assert ac == jvm and jvm["he"] == 3 and jvm["hers"] == 2
-
-    corpus = spark.read.parquet(
-        "/root/testdata/sf0.01/documents.parquet").limit(200)
-    probes2 = [r.text[10:34] for r in corpus.limit(5).collect()]
-    jvm2 = {r.probe: r.n_docs_hit for r in
-            contamination_hits(corpus, probes2).collect()}
-    ac2 = {r.probe: r.n_docs_hit for r in
-           contamination_hits_ac(corpus, probes2).collect()}
-    assert ac2 == jvm2 and jvm2
+    got = {r.probe: r.n_docs_hit for r in
+           contamination_hits(docs, ["he", "she", "hers", "his"]).collect()}
+    assert got == {"he": 3, "she": 2, "hers": 2, "his": 1}
 
 
 def test_dup_span_stats_planted_duplicates(spark):

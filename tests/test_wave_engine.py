@@ -195,6 +195,26 @@ def test_ban_page_cools_host_down(spark, tiny_web, tmp_path):
                for w, u in order)
 
 
+def test_duplicate_page_capture_fails_loudly(spark, tiny_web, tmp_path):
+    """A second capture of the first seed url breaks the pages unique-url
+    invariant: the wave that claims it sees more fetch hits than claims,
+    and the crawl stops with an error instead of running on."""
+    src, _ = tiny_web
+    web_dir = str(tmp_path / "web")
+    shutil.copytree(src, web_dir)
+    seed = pq.read_table(os.path.join(web_dir, "seeds.parquet")) \
+        .column("seed_url")[0].as_py()
+    pages_p = os.path.join(web_dir, "pages.parquet")
+    pages = pq.read_table(pages_p)
+    dup = pages.slice(pages.column("url").to_pylist().index(seed), 1)
+    pq.write_table(pa.concat_tables([pages, dup]), pages_p)
+
+    eng = WaveEngine(spark, web_dir, str(tmp_path / "work"), per_host_k=8,
+                     max_waves=30)
+    with pytest.raises(RuntimeError, match="duplicate captures"):
+        eng.run()
+
+
 def test_fetch_misses_match_simulator(spark, tmp_path):
     """A web with section pages missing from ``pages``: each fetch miss is
     an error row, re-claimed until its crawler_count reaches MAX_ATTEMPTS,
