@@ -68,3 +68,31 @@ def mean_column_bytes(path: str, col: str,
     if tot_rows == 0:
         return None
     return tot_bytes / tot_rows
+
+
+SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(path: str, prefer_timestamp_ntz: bool = True):
+    """The Spark schema of the first parquet file under ``path``, read from
+    its footer on the driver; None when there is no file.
+
+    A Spark-written file stores its schema under Spark's row-metadata key;
+    any other writer's schema is converted from Arrow, with a timestamp
+    that has no time zone read as TIMESTAMP_NTZ when
+    ``prefer_timestamp_ntz`` (Spark's ``inferTimestampNTZ``).  Either way
+    this is the schema ``spark.read.parquet`` infers, without its footer-
+    reading Spark job."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+    files = parquet_files(path)
+    if not files:
+        return None
+    schema = pq.read_schema(files[0])
+    spark_json = (schema.metadata or {}).get(SPARK_ROW_METADATA.encode())
+    if spark_json is not None:
+        return StructType.fromJson(json.loads(spark_json))
+    return from_arrow_schema(schema, prefer_timestamp_ntz)

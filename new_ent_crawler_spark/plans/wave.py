@@ -41,7 +41,7 @@ from ..operators import dedup as DD
 from ..operators import frontier as FR
 from ..operators import parse as PS
 from ..operators import politeness as PL
-from ..sources.snapshot import DeltaTable, SnapshotTable
+from ..sources.snapshot import DeltaTable, SnapshotTable, read_parquet
 
 ORDER_COLS = ["priority", "depth", "page_type_score", "enqueue_wave", "url"]
 # frontier rows below which the seen-set anti-join broadcasts the frontier's
@@ -107,6 +107,9 @@ class WaveEngine:
         # broadcast-bound, so they fit by construction); the budgets table
         # is still committed every wave for resume
         self._budgets_pdf = None
+        # eligible frontier rows before the next wave: None makes that wave
+        # count them; each wave leaves its exact pending_after here
+        self._pending: int | None = None
 
     # -- inputs ------------------------------------------------------------
 
@@ -119,16 +122,16 @@ class WaveEngine:
         against claims and duplicate hits would mask misses.  The wave loop
         fails loudly on the first wave where n_hits > n_claimed.
         """
-        return self.spark.read.parquet(
-            os.path.join(self.data_dir, "pages.parquet"))
+        return read_parquet(self.spark,
+                            os.path.join(self.data_dir, "pages.parquet"))
 
     def seeds(self) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self.data_dir, "seeds.parquet"))
+        return read_parquet(self.spark,
+                            os.path.join(self.data_dir, "seeds.parquet"))
 
     def robots(self) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self.data_dir, "robots.parquet"))
+        return read_parquet(self.spark,
+                            os.path.join(self.data_dir, "robots.parquet"))
 
     # -- lifecycle -----------------------------------------------------------
 
@@ -169,7 +172,12 @@ class WaveEngine:
 
     def _budgets(self):
         if self._budgets_pdf is None:  # resume: reload committed state
-            self._budgets_pdf = self.budgets_t.read(self.spark).toPandas()
+            # driver-side: the table is broadcast-sized and pyarrow-written
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+            self._budgets_pdf = pa.concat_tables(
+                [pq.read_table(p) for p in self.budgets_t._paths()]
+            ).to_pandas()
         return self._budgets_pdf
 
     def _commit_budgets(self, wave: int):
@@ -201,7 +209,7 @@ class WaveEngine:
             self._init_state(seeds)
             return
         wave = self.last_wave()
-        new = FR.init_frontier(seeds).join(self.frontier().select("url"),
+        new = FR.init_frontier(seeds).join(self.frontier_t.keys(self.spark),
                                            "url", "left_anti")
         self.frontier_t.append_delta(new, version=wave, meta={"wave": wave})
 
@@ -217,13 +225,10 @@ class WaveEngine:
 
         t0 = _time.perf_counter()
         spark = self.spark
-        # three jobs per wave scan the frontier (dequeue+pending head job,
-        # the seen-set anti-join, the delta upsert build); persist the
-        # merged view once instead of re-executing the base∪delta
-        # merge-on-read DAG per job — the materialization is O(frontier)
-        # but partition-parallel, and the wave was already O(frontier)-read
-        # by construction (the dequeue must scan it)
-        frontier = self.frontier_t.read(spark).persist()
+        # the merged frontier feeds only the dequeue (and, on a drain's
+        # first wave, the pending count); the seen-set anti-join reads the
+        # unmerged keys (DeltaTable.keys), so nothing re-reads the merge
+        frontier = self.frontier_t.read(spark)
         budgets_pdf = self._budgets()
         t0 = _t("rs_plan", t0)   # manifest read + merge-on-read DAG build
 
@@ -233,31 +238,37 @@ class WaveEngine:
         claimed = claimed.persist()
         t0 = _t("dq_plan", t0)   # driver-side dequeue DAG build
         # one job: materialize the claim cache AND produce the per-host
-        # claim counts (feeds the driver-side budget spend) AND count the
-        # still-eligible frontier — per-wave fixed job count bounds scaling
-        head_rows = (claimed.groupBy("host")
-                     .agg(F.count("*").alias("n"),
-                          F.min("url").alias("lo"), F.max("url").alias("hi"))
-                     .unionByName(
-                         frontier.filter(FR.eligibility_predicate())
-                         .agg(F.count("*").alias("n"))
-                         .select(F.lit("\0pending").alias("host"), "n",
-                                 F.lit(None).cast("string").alias("lo"),
-                                 F.lit(None).cast("string").alias("hi")))
-                     .collect())
+        # claim counts (feeds the driver-side budget spend) — per-wave fixed
+        # job count bounds scaling.  Only a drain's first wave also counts
+        # the eligible frontier (resume, seeds added since the last drain);
+        # every later wave starts from the previous wave's exact
+        # pending_after
+        head = (claimed.groupBy("host")
+                .agg(F.count("*").alias("n"),
+                     F.min("url").alias("lo"), F.max("url").alias("hi")))
+        if self._pending is None:
+            head = head.unionByName(
+                frontier.filter(FR.eligibility_predicate())
+                .agg(F.count("*").alias("n"))
+                .select(F.lit("\0pending").alias("host"), "n",
+                        F.lit(None).cast("string").alias("lo"),
+                        F.lit(None).cast("string").alias("hi")))
+        head_rows = head.collect()
         used = {r.host: r.n for r in head_rows if r.host != "\0pending"}
         # per-host claimed url ranges, for row-group pruning of the fetch
         # scan (comes back on the same fused head job — no extra job)
         url_bounds = [(r.lo, r.hi) for r in head_rows
                       if r.host != "\0pending" and r.lo is not None]
-        pending = next(r.n for r in head_rows if r.host == "\0pending")
+        pending = next((r.n for r in head_rows if r.host == "\0pending"),
+                       self._pending)
+        self._pending = None  # until this wave commits its pending_after
         n_claimed = sum(used.values())
-        t0 = _t("dequeue", t0)   # the fused head job (frontier materialize)
+        t0 = _t("dequeue", t0)   # the fused head job (dequeue + claim cache)
         stats = {"wave": wave, "claimed": n_claimed,
                  "pending_before": pending, "timings": timings}
         if n_claimed == 0:
+            self._pending = pending  # nothing committed
             claimed.unpersist()
-            frontier.unpersist()
             return stats
 
         # fetch = broadcast-hash probe of the big pages scan: the *claimed*
@@ -386,11 +397,11 @@ class WaveEngine:
             PL.robots_allowed(PS.explode_links(parsed, wave_id=wave),
                               self.robots()))
         candidates = candidates.persist()
-        # seen side = the whole frontier url set; the head job counted the
-        # pending slice, so approximate the frontier size from the table's
-        # row-count metadata kept by the delta log (cheap, driver-side)
-        new_urls = DD.filter_new_urls(candidates, frontier.select("url"),
-                                      None,
+        # seen side = the frontier's url set, read unmerged (a url once per
+        # base or delta version holding it: the anti-join result is the
+        # same); its size comes from the footers of the same dirs
+        new_urls = DD.filter_new_urls(candidates,
+                                      self.frontier_t.keys(spark), None,
                                       seen_count=self.frontier_t.approx_rows(),
                                       broadcast_below=SEEN_BROADCAST_BELOW
                                       ).persist()
@@ -399,7 +410,9 @@ class WaveEngine:
         # candidate/new counters, the per-partition lineage counters, and
         # the blocked-host set — per-wave fixed job count is what bounds
         # scaling once the parse stage is fast (Amdahl), so every small
-        # action is fused into this single generic-schema collect.
+        # action is fused into this single collect: the three counters are
+        # tagged rows of one union under one groupBy(kind, pid), one
+        # exchange.
         #
         # "c" column = rows that will still be claim-eligible AFTER this
         # wave's delta commits: the eligibility predicate over the claims'
@@ -409,32 +422,28 @@ class WaveEngine:
         # wave (a full dequeue job whose only output is pending == 0).
         updated = parsed.withColumn(
             "crawler_count", (F.col("crawler_count") + 1).cast("int"))
-        new_branch = (
-            new_urls.agg(
-                F.count("*").alias("a"),
-                F.sum(FR.eligibility_predicate().cast("long")).alias("c"))
-            .select(
+        eligible = FR.eligibility_predicate().cast("long")
+        zero = F.lit(0).cast("long")
+        no_host = F.lit(None).cast("string")
+        ctrl = (
+            updated.select(
+                F.lit("parse").alias("kind"),
+                F.spark_partition_id().alias("pid"),
+                F.coalesce(F.size("links"), F.lit(0)).cast("long").alias("b"),
+                eligible.alias("c"),
+                F.when(F.col("blocked"), F.col("host")).alias("h"))
+            .unionByName(candidates.select(
+                F.lit("cand").alias("kind"), F.lit(-1).alias("pid"),
+                zero.alias("b"), zero.alias("c"), no_host.alias("h")))
+            .unionByName(new_urls.select(
                 F.lit("new").alias("kind"), F.lit(-1).alias("pid"),
-                "a", F.lit(0).cast("long").alias("b"), "c",
-                F.lit("").alias("s")))
-        ctrl = (updated
-                .groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count("*").alias("a"),
-                     F.sum(F.coalesce(F.size("links"), F.lit(0))).alias("b"),
-                     F.sum(FR.eligibility_predicate().cast("long")).alias("c"),
-                     F.concat_ws(
-                         "\x01",
-                         F.collect_set(F.when(F.col("blocked"),
-                                              F.col("host")))).alias("s"))
-                .select(F.lit("parse").alias("kind"), "pid", "a", "b", "c",
-                        "s")
-                .unionByName(candidates.agg(F.count("*").alias("a")).select(
-                    F.lit("cand").alias("kind"), F.lit(-1).alias("pid"),
-                    "a", F.lit(0).cast("long").alias("b"),
-                    F.lit(0).cast("long").alias("c"), F.lit("").alias("s")))
-                .unionByName(new_branch)
-                .collect())
-        n_candidates = next(r.a for r in ctrl if r.kind == "cand")
+                zero.alias("b"), eligible.alias("c"), no_host.alias("h")))
+            .groupBy("kind", "pid")
+            .agg(F.count("*").alias("a"), F.sum("b").alias("b"),
+                 F.sum("c").alias("c"),
+                 F.concat_ws("\x01", F.collect_set("h")).alias("s"))
+            .collect())
+        n_candidates = sum(r.a for r in ctrl if r.kind == "cand")
         n_new = sum(r.a for r in ctrl if r.kind == "new")
         n_still_eligible = sum(r.c or 0 for r in ctrl if r.kind == "parse")
         n_new_eligible = sum(r.c or 0 for r in ctrl if r.kind == "new")
@@ -494,13 +503,13 @@ class WaveEngine:
                                     n_files=max(16, cores))
 
         _t("frontier_merge", t0)
+        # exact post-commit pending count: unclaimed eligible rows + claims
+        # that stayed retryable + eligible new rows (see the "c" counter
+        # above); the next wave of this drain starts from it
+        self._pending = (pending - n_claimed
+                         + n_still_eligible + n_new_eligible)
         stats.update({"candidates": n_candidates, "new": n_new,
-                      # exact post-commit pending count: unclaimed eligible
-                      # rows + claims that stayed retryable + eligible new
-                      # rows (see the "c" counter above)
-                      "pending_after": (pending - n_claimed
-                                        + n_still_eligible + n_new_eligible)})
-        frontier.unpersist()
+                      "pending_after": self._pending})
         claimed.unpersist()
         parsed_hits.unpersist()
         candidates.unpersist()
@@ -524,6 +533,7 @@ class WaveEngine:
         start = self.last_wave()
         self._rollback_appends(start)
         self._budgets_pdf = None  # reload politeness state post-rollback
+        self._pending = None  # the first wave counts the eligible frontier
         pages = self.pages().select("url", "html")
         # bytes-bounded Arrow batches for the parse stage (row cap derived
         # from the parquet footers' per-column byte stats — driver-side,
@@ -559,8 +569,8 @@ class WaveEngine:
         return self.frontier_t.read(self.spark)
 
     def seen_urls(self) -> list[str]:
-        return sorted(r.url for r in
-                      self.frontier().select("url").distinct().collect())
+        return sorted(r.url for r in self.frontier_t.keys(self.spark)
+                      .distinct().collect())
 
     def crawl_order(self) -> list[tuple]:
         """Deterministic crawl-order log: (wave, url) sorted by the priority

@@ -25,7 +25,21 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..parquet_meta import footer_rows
+from ..parquet_meta import footer_rows, footer_schema
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema taken on the driver
+    from the first file's footer (``parquet_meta.footer_schema``), so the
+    read runs no schema-inference job.  Every engine table and input is
+    read through here.  With no file under ``paths`` Spark infers, and
+    fails as it always has."""
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled",
+                         "true") == "true"
+    schema = next((s for s in (footer_schema(p, ntz) for p in paths)
+                   if s is not None), None)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 class SnapshotTable:
@@ -101,7 +115,7 @@ class SnapshotTable:
         construction — budgets must fit a broadcast, lineage is a handful of
         counters per wave — so a Spark write job per wave is pure fixed cost
         (the Iceberg analogue: metadata-sized commits don't launch executor
-        jobs either).  The resulting files read back via spark.read.parquet
+        jobs either).  The resulting files read back via read_parquet
         exactly like executor-written data dirs."""
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -146,12 +160,15 @@ class SnapshotTable:
 
     # -- reads ---------------------------------------------------------------
 
-    def read(self, spark: SparkSession) -> DataFrame:
+    def _paths(self) -> list[str]:
+        """The current snapshot's data dirs; raises when there is none."""
         cur = self.current_snapshot()
         if cur is None or not cur["dirs"]:
             raise ValueError(f"table {self.path} has no current snapshot")
-        paths = [os.path.join(self.path, d) for d in cur["dirs"]]
-        return spark.read.parquet(*paths)
+        return [os.path.join(self.path, d) for d in cur["dirs"]]
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        return read_parquet(spark, *self._paths())
 
     def meta(self) -> dict:
         cur = self.current_snapshot()
@@ -163,15 +180,16 @@ class SnapshotTable:
 
 def _lww_merge(base: DataFrame, deltas: DataFrame, key_col: str,
                version_col: str) -> DataFrame:
-    """Last-writer-wins merge-on-read resolution: base rows whose key has
-    no delta row, unioned with the latest delta row per key."""
-    from pyspark.sql import Window
+    """Last-writer-wins merge-on-read resolution: the latest delta row per
+    key (one ``max_by`` aggregate over the deltas), unioned with the base
+    rows whose key has no delta row (an anti-join of the unshuffled base
+    against the delta keys, duplicates and all)."""
     from pyspark.sql import functions as F
-    w = Window.partitionBy(key_col).orderBy(F.col(version_col).desc())
-    latest = (deltas.withColumn("_rn", F.row_number().over(w))
-              .filter(F.col("_rn") == 1)
-              .drop("_rn", version_col))
-    keep = base.join(deltas.select(key_col).distinct(), key_col, "left_anti")
+    cols = [c for c in deltas.columns if c not in (key_col, version_col)]
+    latest = (deltas.groupBy(key_col)
+              .agg(F.max_by(F.struct(*cols), version_col).alias("_row"))
+              .select(key_col, "_row.*"))
+    keep = base.join(deltas.select(key_col), key_col, "left_anti")
     return keep.unionByName(latest)
 
 
@@ -185,12 +203,16 @@ class DeltaTable(SnapshotTable):
       with a ``commit_version``; O(delta).  This is the per-wave frontier
       commit: a wave touches (claimed + discovered) rows, bounded by the
       politeness budgets, so the write does not scale with the frontier.
-    * ``read``        — base rows whose key has no delta row, unioned with
-      the latest delta row per key.  Deltas-since-compaction stay bounded
-      (compaction every K waves), so AQE turns the base-side anti-join into
-      a broadcast probe — no frontier-wide shuffle on the read either.  On
+    * ``read``        — the latest delta row per key (one ``max_by``
+      aggregate, the only exchange of the merge), unioned with the base
+      rows whose key has no delta row.  Deltas-since-compaction stay
+      bounded (compaction every K waves), so AQE turns the base-side
+      anti-join into a broadcast probe and the base is never shuffled.  On
       a real cluster both base and deltas are bucketed by the key, making
       the merge bucket-local (Iceberg merge-on-read with equality deletes).
+    * ``keys``        — the key column of base and deltas as one scan, with
+      a key once per version that holds it: the seen set of an anti-join,
+      which needs no merge.
     """
 
     VERSION_COL = "_commit_version"
@@ -257,19 +279,22 @@ class DeltaTable(SnapshotTable):
                    for d in cur["dirs"])
 
     def read(self, spark: SparkSession) -> DataFrame:
-        cur = self.current_snapshot()
-        if cur is None or not cur["dirs"]:
-            raise ValueError(f"table {self.path} has no current snapshot")
-        n_base = cur["meta"].get("n_base", len(cur["dirs"]))
-        paths = [os.path.join(self.path, d) for d in cur["dirs"]]
-        base = spark.read.parquet(*paths[:n_base])
+        paths = self._paths()
+        n_base = self.meta().get("n_base", len(paths))
+        base = read_parquet(spark, *paths[:n_base])
         if n_base >= len(paths):
             return base.drop(self.VERSION_COL)
-        deltas = spark.read.parquet(*paths[n_base:])
+        deltas = read_parquet(spark, *paths[n_base:])
         # LWW among the (small) deltas only; base rows are versionless —
         # any delta row for a key supersedes the base row
         return _lww_merge(base.drop(self.VERSION_COL), deltas,
                           self.key_col, self.VERSION_COL)
+
+    def keys(self, spark: SparkSession) -> DataFrame:
+        """The ``key_col`` of every base and delta row, unmerged: each key
+        the merged table holds, once per version that wrote it.  A left-anti
+        join against it equals one against ``read``'s keys."""
+        return read_parquet(spark, *self._paths()).select(self.key_col)
 
     def compact(self, spark: SparkSession, version: int,
                 n_files: int = 16) -> dict:

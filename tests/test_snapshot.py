@@ -106,3 +106,9 @@ def test_delta_merge_matches_lww_semantics(spark, tmp_path):
     got = {r["url"]: (r["status"], r["src"])
            for r in t.read(spark).collect()}
     assert got == expected
+    # the unmerged key scan: a key once per version that wrote it (40 base
+    # + 15 + 5 delta rows), and exactly the merged key set
+    keys = t.keys(spark)
+    assert keys.columns == ["url"]
+    assert keys.count() == 60
+    assert sorted(r.url for r in keys.distinct().collect()) == sorted(expected)

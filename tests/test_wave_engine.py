@@ -33,9 +33,42 @@ def _simulator_for(web_dir, **kw):
     return sim
 
 
+class _AuditedEngine(WaveEngine):
+    """A WaveEngine that, around each wave, counts the eligible rows of the
+    committed frontier (``eligible[k]`` after wave k, ``eligible[k - 1]``
+    before a drain's first wave k) and tags the wave's Spark jobs with the
+    job group ``<work dir>-wave-<k>`` (``wave_jobs`` reads them back)."""
+
+    def __init__(self, *args, **kw):
+        super().__init__(*args, **kw)
+        self.eligible: dict[int, int] = {}
+
+    def _count_eligible(self) -> int:
+        return self.frontier().filter(W.FR.eligibility_predicate()).count()
+
+    def run_wave(self, wave, pages):
+        sc = self.spark.sparkContext
+        if wave - 1 not in self.eligible:
+            self.eligible[wave - 1] = self._count_eligible()
+        sc.setJobGroup(f"{self.work_dir}-wave-{wave}", "audited wave")
+        try:
+            stats = super().run_wave(wave, pages)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        self.eligible[wave] = self._count_eligible()
+        return stats
+
+    def wave_jobs(self, wave: int) -> int:
+        """Spark jobs the wave ran, once the listener bus has caught up."""
+        sc = self.spark.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(
+            f"{self.work_dir}-wave-{wave}"))
+
+
 def _crawl(spark, web_dir, tmp_path_factory):
     work = str(tmp_path_factory.mktemp("work"))
-    eng = WaveEngine(spark, web_dir, work, per_host_k=8, max_waves=30)
+    eng = _AuditedEngine(spark, web_dir, work, per_host_k=8, max_waves=30)
     stats = eng.run()
     sim = _simulator_for(web_dir, per_host_k=8, max_waves=30)
     return eng, sim, stats
@@ -124,15 +157,68 @@ def test_fast_seeding_equals_spark_seeding(crawl, spark, tiny_web):
             == sorted(map(tuple, spark_b.itertuples(index=False))))
 
 
+def test_footer_schema_matches_inference(crawl, spark, tiny_web):
+    """The schema the engine reads its tables and inputs with, taken from
+    the first file's footer, is the one ``spark.read.parquet`` infers: for
+    the inputs and every dir a crawl leaves, pyarrow-written (frontier
+    base, lineage with its UTC timestamp, budgets) and Spark-written
+    (frontier deltas, extracted)."""
+    from new_ent_crawler_spark.parquet_meta import (SPARK_ROW_METADATA,
+                                                    footer_schema,
+                                                    parquet_files)
+    eng, _, _ = crawl
+    web_dir, _ = tiny_web
+    paths = [os.path.join(web_dir, f) for f in
+             ("pages.parquet", "seeds.parquet", "robots.parquet")]
+    for t in (eng.frontier_t, eng.extracted_t, eng.lineage_t, eng.budgets_t):
+        paths += t._paths()
+    writers = set()
+    for p in paths:
+        schema = footer_schema(p)
+        inferred = spark.read.parquet(p).schema
+        assert ([(f.name, f.dataType.simpleString()) for f in schema]
+                == [(f.name, f.dataType.simpleString()) for f in inferred]), p
+        assert spark.read.schema(schema).parquet(p).schema == inferred, p
+        meta = pq.read_schema(parquet_files(p)[0]).metadata or {}
+        writers.add(SPARK_ROW_METADATA.encode() in meta)
+    assert writers == {True, False}
+    lineage = footer_schema(eng.lineage_t._paths()[0])
+    assert lineage["ts"].dataType.simpleString() == "timestamp"
+
+
 def test_pending_after_exact(crawl):
-    """The fused still-eligible counters must predict the next wave's
-    pending count exactly — they are what lets run() stop without a probe
-    wave (per-run fixed cost on every scaling leg)."""
-    _, _, stats = crawl
-    for prev, nxt in zip(stats, stats[1:]):
-        if "pending_after" in prev:  # absent on zero-claim refill waves
-            assert prev["pending_after"] == nxt["pending_before"]
+    """The fused still-eligible counters must give each wave's post-commit
+    pending count exactly: later waves of a drain start from it instead of
+    counting, and run() stops on it without a probe wave.  Both counts are
+    checked against the eligible rows of the committed frontier."""
+    eng, _, stats = crawl
+    for s in stats:
+        assert s["pending_before"] == eng.eligible[s["wave"] - 1]
+        if "pending_after" in s:  # absent on zero-claim refill waves
+            assert s["pending_after"] == eng.eligible[s["wave"]]
     assert stats[-1].get("pending_after") == 0
+
+
+# Spark jobs a wave with no fetch miss and no compaction may run, after a
+# drain's first wave (which also counts the eligible frontier): the head
+# collect, the extracted append, the control collect and the frontier-delta
+# write, with the exchanges and broadcasts each runs as its own job
+STEADY_WAVE_JOBS = 20
+
+
+def test_wave_job_budget(crawl):
+    """The per-wave fixed cost: a steady-state wave runs no more than
+    STEADY_WAVE_JOBS Spark jobs, so a schema-inference job per table read
+    or a control collect with one exchange per counter shows up here."""
+    eng, _, stats = crawl
+    man = eng.frontier_t._read_manifest()
+    compacted = {s["meta"]["wave"] for s in man["snapshots"]
+                 if len(s["dirs"]) == 1}
+    steady = [s["wave"] for s in stats[1:]
+              if s["wave"] not in compacted and s["claimed"] > 0]
+    assert steady
+    jobs = {w: eng.wave_jobs(w) for w in steady}
+    assert max(jobs.values()) <= STEADY_WAVE_JOBS, jobs
 
 
 def test_resume_from_checkpoint(spark, tiny_web, tmp_path_factory):
@@ -266,8 +352,10 @@ def test_add_seeds_joins_frontier(spark, tiny_web, tmp_path):
     assert eng.frontier_t.dir_rows(snap["dirs"][-1]) == len(late)
     rows = {r.url: (r.status, r.depth) for r in eng.frontier().collect()}
     assert all(rows[u] == (0, 0) for u in late)
+    # the next drain counts pending again: the late seeds are eligible
+    pending = eng.frontier().filter(W.FR.eligibility_predicate()).count()
     eng.max_waves = 3
-    eng.drain()
+    assert eng.drain()[0]["pending_before"] == pending
     n_rows = dict(eng.frontier().filter(F.col("url").isin(late))
                   .groupBy("url").count().collect())
     assert n_rows == {u: 1 for u in late}
