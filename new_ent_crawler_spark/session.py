@@ -63,6 +63,12 @@ def get_spark(app: str = "new-ent-crawler-spark", cpus: int | None = None,
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # the generated-code cache must hold every class a repeated plan
+        # needs, or each repeat runs Janino and the JIT again: the 99-query
+        # oracle registry compiles ~900 classes, the headline suite ~200,
+        # an 18-wave crawl ~250, most in its first two waves; the default
+        # 100 entries, split into 4 LRU segments, hold none of these
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, str(v))

@@ -16,6 +16,13 @@ def spark():
     s.stop()
 
 
+def compiled_classes(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far (a
+    class found in the codegen cache is not compiled again)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 @pytest.fixture(scope="session")
 def tiny_web(tmp_path_factory):
     """Small deterministic synthetic web shared across tests."""

@@ -13,6 +13,9 @@ import __spark_entry__ as entrymod
 from new_ent_crawler_spark.operators import dedup as DD
 from new_ent_crawler_spark.operators import frontier as FR
 
+from .conftest import compiled_classes
+from .test_queries import SF_DIR
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -153,3 +156,22 @@ def test_jaccard_posting_exchange_uses_hashed_shingles(spark):
     import re
     parts = re.findall(r"hashpartitioning\(shingle#\d+(L?)", plan)
     assert parts and all(suffix == "L" for suffix in parts)
+
+
+def test_headline_queries_compile_once(spark):
+    """A repeated plan finds every generated class in Spark's codegen
+    cache: a second run of the 21 headline queries compiles no class.  A
+    cache smaller than the suite's ~200 classes recompiles all of them."""
+    import bench
+    bench._EMITTED = True  # importing bench registers an atexit line flush
+    qs = entrymod.queries()
+
+    def run() -> int:
+        before = compiled_classes(spark)
+        for name in bench.HEADLINE:
+            qs[name](spark, SF_DIR).collect()
+            spark.catalog.clearCache()
+        return compiled_classes(spark) - before
+
+    run()
+    assert run() == 0

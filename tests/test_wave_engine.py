@@ -21,6 +21,8 @@ from new_ent_crawler_spark.plans.wave import WaveEngine
 from new_ent_crawler_spark.simulator import Simulator
 from new_ent_crawler_spark.synth import webgen
 
+from .conftest import compiled_classes
+
 
 def _simulator_for(web_dir, **kw):
     pages = webgen.load_fetch(web_dir)
@@ -36,12 +38,14 @@ def _simulator_for(web_dir, **kw):
 class _AuditedEngine(WaveEngine):
     """A WaveEngine that, around each wave, counts the eligible rows of the
     committed frontier (``eligible[k]`` after wave k, ``eligible[k - 1]``
-    before a drain's first wave k) and tags the wave's Spark jobs with the
-    job group ``<work dir>-wave-<k>`` (``wave_jobs`` reads them back)."""
+    before a drain's first wave k), tags the wave's Spark jobs with the
+    job group ``<work dir>-wave-<k>`` (``wave_jobs`` reads them back) and
+    records the classes the wave compiled (``compiled[k]``)."""
 
     def __init__(self, *args, **kw):
         super().__init__(*args, **kw)
         self.eligible: dict[int, int] = {}
+        self.compiled: dict[int, int] = {}
 
     def _count_eligible(self) -> int:
         return self.frontier().filter(W.FR.eligibility_predicate()).count()
@@ -51,10 +55,12 @@ class _AuditedEngine(WaveEngine):
         if wave - 1 not in self.eligible:
             self.eligible[wave - 1] = self._count_eligible()
         sc.setJobGroup(f"{self.work_dir}-wave-{wave}", "audited wave")
+        before = compiled_classes(self.spark)
         try:
             stats = super().run_wave(wave, pages)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+        self.compiled[wave] = compiled_classes(self.spark) - before
         self.eligible[wave] = self._count_eligible()
         return stats
 
@@ -199,6 +205,18 @@ def test_pending_after_exact(crawl):
     assert stats[-1].get("pending_after") == 0
 
 
+def _steady_waves(eng, stats) -> list[int]:
+    """The crawl's waves after the first that claimed URLs and ran no
+    frontier compaction."""
+    man = eng.frontier_t._read_manifest()
+    compacted = {s["meta"]["wave"] for s in man["snapshots"]
+                 if len(s["dirs"]) == 1}
+    steady = [s["wave"] for s in stats[1:]
+              if s["wave"] not in compacted and s["claimed"] > 0]
+    assert steady
+    return steady
+
+
 # Spark jobs a wave with no fetch miss and no compaction may run, after a
 # drain's first wave (which also counts the eligible frontier): the head
 # collect, the extracted append, the control collect and the frontier-delta
@@ -211,14 +229,38 @@ def test_wave_job_budget(crawl):
     STEADY_WAVE_JOBS Spark jobs, so a schema-inference job per table read
     or a control collect with one exchange per counter shows up here."""
     eng, _, stats = crawl
-    man = eng.frontier_t._read_manifest()
-    compacted = {s["meta"]["wave"] for s in man["snapshots"]
-                 if len(s["dirs"]) == 1}
-    steady = [s["wave"] for s in stats[1:]
-              if s["wave"] not in compacted and s["claimed"] > 0]
-    assert steady
-    jobs = {w: eng.wave_jobs(w) for w in steady}
+    jobs = {w: eng.wave_jobs(w) for w in _steady_waves(eng, stats)}
     assert max(jobs.values()) <= STEADY_WAVE_JOBS, jobs
+
+
+# classes a wave that runs its predecessor's plans may compile: the code
+# that inlines the wave number as a literal, i.e. the extracted append's
+# wave_id and the frontier delta's two commit-version projections (each
+# compiled by the driver and again by the tasks, since the codegen cache is
+# keyed by class loader too) and the merge aggregate over the links'
+# enqueue_wave; 7 classes on tiny_web
+STEADY_WAVE_COMPILES = 10
+
+
+def test_wave_compile_budget(crawl):
+    """Every class a repeated plan needs stays in Spark's codegen cache:
+    a wave that runs its predecessor's plans compiles no more than
+    STEADY_WAVE_COMPILES classes, where a cache smaller than the crawl's
+    working set recompiles most of a wave's ~80.  Such a wave is a steady
+    wave whose predecessor was steady and claimed from as many hosts: the
+    fetch filter has one URL range per claimed host, so a host that runs
+    dry plans a new filter, and wave 2, the first to read frontier deltas,
+    follows the drain's first wave."""
+    eng, _, stats = crawl
+    hosts: dict[int, set] = {}
+    for wave, url in eng.crawl_order():
+        hosts.setdefault(wave, set()).add(url.split("/")[2])
+    steady = _steady_waves(eng, stats)
+    repeats = [w for w in steady
+               if w - 1 in steady and len(hosts[w]) == len(hosts[w - 1])]
+    assert repeats
+    compiled = {w: eng.compiled[w] for w in repeats}
+    assert max(compiled.values()) <= STEADY_WAVE_COMPILES, compiled
 
 
 def test_resume_from_checkpoint(spark, tiny_web, tmp_path_factory):
